@@ -149,9 +149,11 @@ object Bench {
         // as fast successes in BENCH_r{N}.json
         val dt = (System.nanoTime() - t0) / 1e9 * (if (ok) 1 else -1)
         if (BuildMeter.count > b0) touched += name
-        // isolate queries: drop caches a query created so the next one isn't
-        // measured under its memory pressure
+        // isolate queries: drop caches and per-call pins a query created
+        // so the next one isn't measured under their memory pressure
+        // (shared memo builds stay warm)
         spark.catalog.clearCache()
+        Memo.releaseUnowned(spark)
         (pass, name, dt)
       }
     }

@@ -164,17 +164,17 @@ object ScaleBench {
                          shuffleRatio: Double)
     val zero = StageMetrics.Snap(0, 0, 0, 0, 0, 0)
     val rows = slowest.map { case (name, t1) =>
-      // cold-memo isolation PER LEG (see MemoSweep / the SKEW100
+      // cold-memo isolation PER LEG (see Memo / the SKEW100
       // UNABLE_TO_ACQUIRE_MEMORY and skew-leg-spill lessons): both legs
       // measure with the same memory posture — neither inherits the
       // other dir's pinned checkpoint blocks
-      MemoSweep.sweep(spark)
+      Memo.sweep(spark)
       val fn = all.find(_._1 == name).get._2
       // t1 > 0 (failed base runs were filtered out of `slowest`); a
       // failed re-measurement keeps its negative marker and is ignored
       // rather than abs'd into a bogus tiny base time.
       // Both legs measure TWICE after their sweep and keep the faster
-      // (warm) run's metrics: with per-leg MemoSweep a single base
+      // (warm) run's metrics: with a per-leg sweep a single base
       // re-measure is a COLD run whose shuffle bytes include the
       // first-touch memo build, so shuffle_ratio / records_ratio would
       // divide a warm scaled leg by a cold base and understate growth
@@ -188,7 +188,7 @@ object ScaleBench {
         else (t2a, m2a)
       val base = if (t2 > 0) math.min(t1, t2) else t1
       val baseM = if (t2 > 0) m2 else zero
-      MemoSweep.sweep(spark)
+      Memo.sweep(spark)
       val (s1, ms1) = timeM(fn, scaleDir)
       val (s2, ms2) = timeM(fn, scaleDir)
       val (scaled, scaledM) =

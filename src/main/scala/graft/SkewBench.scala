@@ -86,7 +86,7 @@ object SkewBench {
       // 1.6 GB on the skew leg only, with equal shuffle bytes. Sweeping
       // per leg gives both legs the same memory posture; run 1 builds,
       // run 2 is warm, min-of-2 picks the warm run as before.
-      MemoSweep.sweep(spark)
+      Memo.sweep(spark)
       def one(): (Double, StageMetrics.Snap, Double) = {
         val before = agg.settled()
         agg.drainImbalance() // clear stages billed to earlier work

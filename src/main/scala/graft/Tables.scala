@@ -26,7 +26,7 @@ object Tables {
     * q_ref_integrity plan build ran 14 such jobs back to back, ~0.4 s
     * of serial planning before the first real stage). The schema of a
     * fixture is immutable for a given fingerprint (mtime+length of
-    * every part file, the MemoSweep discipline), so infer once and pass
+    * every part file, [[Memo.fingerprint]]), so infer once and pass
     * the schema explicitly — guide §6's avoid-repeated-listing point
     * applied to footer reads. Plain StructType values: no session
     * reference, safe to share across sessions; an in-place fixture
@@ -36,7 +36,7 @@ object Tables {
 
   private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val sch = schemaMemo.computeIfAbsent((path, CorpusFp.of(dir, name)),
+    val sch = schemaMemo.computeIfAbsent((path, Memo.fingerprint(dir, name)),
       _ => spark.read.parquet(path).schema)
     spark.read.schema(sch).parquet(path)
   }

@@ -114,21 +114,16 @@ object Bpe {
     out
   }
 
-  /** Trained-merge memo per corpus dir — tokenizer training is
-    * once-per-corpus work (the ingest-time-index precedent in
-    * [[Similarity]]): the merges query and the encode query share one
-    * training run instead of each re-running the loop. Keyed by dir; the
-    * harness fixture dirs are immutable (a regenerated-in-place corpus
-    * would serve stale merges — the same documented trade as GraftSql's
-    * view memo). */
+  /** Trained-merge memo per (corpus dir, documents fingerprint) —
+    * tokenizer training is once-per-corpus work (the ingest-time-index
+    * precedent in [[Similarity]]): the merges query and the encode query
+    * share one training run instead of each re-running the loop, and a
+    * corpus regenerated in place retrains. */
   private val trained =
-    graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, String, String, Long)]]())
+    new graft.Memo.Local[Seq[(Int, String, String, Long)]]("documents")
 
   private def trainedMerges(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] =
-    trained.computeIfAbsent(dir, { _ =>
-      graft.BuildMeter.record()
-      trainMerges(wordTable(Tables.documents(s, dir)), N_MERGES)
-    })
+    trained(s, dir)(trainMerges(wordTable(Tables.documents(s, dir)), N_MERGES))
 
   /** Registered query: the first N_MERGES BPE merges learned from the
     * documents corpus, with their pair frequencies. */
@@ -391,15 +386,13 @@ object Bpe {
     * lifecycle): (word → final segmentation, final usage, final costs)
     * are plain driver data, shared by the inventory query and the
     * fertility census. */
-  private val uniTrained = graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[
-    String, (Map[String, Seq[String]], Map[String, Long], Map[String, Long])]())
+  private val uniTrained = new graft.Memo.Local[
+    (Map[String, Seq[String]], Map[String, Long], Map[String, Long])]("documents")
 
   private def trainedUnigram(s: SparkSession, dir: String)
       : (Map[String, Seq[String]], Map[String, Long], Map[String, Long]) =
-    uniTrained.computeIfAbsent(dir, { _ =>
-      graft.BuildMeter.record()
-      uniTrainCore(collectWords(Tables.documents(s, dir).select("text")))
-    })
+    uniTrained(s, dir)(
+      uniTrainCore(collectWords(Tables.documents(s, dir).select("text"))))
 
   private def collectWords(docs: DataFrame): Seq[(String, Long)] = {
     val s = docs.sparkSession

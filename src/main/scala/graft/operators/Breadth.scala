@@ -1967,7 +1967,8 @@ object Breadth {
     // self-join's two readers, and the user census ran as its own serial
     // driver job BEFORE the main plan; it now rides in the plan as a
     // broadcast branch over the pinned blocks — same exact integer, one
-    // job instead of two)
+    // job instead of two). The census's countDistinct excludes NULL
+    // user_ids, matching SQL COUNT(DISTINCT) in the oracle.
     val ut = Tables.events(s, dir)
       .select("user_id", "event_type").distinct()
       .localCheckpoint()

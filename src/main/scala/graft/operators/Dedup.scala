@@ -131,34 +131,14 @@ object Dedup {
     * trained-merges first-touch split). The pinned frame replaces the
     * per-query cache/unpersist dance for the pair set; the wide shingle
     * docs stay per-query caches (pinning corpus-scale arrays is the
-    * memory trade the mhidx INDEX TABLE exists for). */
-  private val candMemo =
-    graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[(Int, String, Long), DataFrame]())
-
-  /** Fingerprint of the corpus files backing a memo entry: (name, length,
-    * mtime) of every part file, name-sorted ([[graft.CorpusFp]]). Keying
-    * memos on it makes an IN-PLACE fixture regeneration a cache miss
-    * instead of a stale hit (ADVICE r6). */
-  private def corpusFingerprint(dir: String): Long =
-    graft.CorpusFp.of(dir, "documents")
-
-  /** Memo lookup with the lifecycle guards ADVICE r6 asked for: entries
-    * whose SparkContext has stopped — or whose fingerprint is stale for
-    * this (session, dir) — are swept on every lookup ([[graft.CorpusFp
-    * .sweep]]), and a hit is only served when the cached frame's session
-    * IS the caller's session (`eq`, not hashCode — collisions rebuild). */
-  private def memoized(memo: java.util.concurrent.ConcurrentHashMap[(Int, String, Long), DataFrame],
-                       s: SparkSession, dir: String)(build: => DataFrame): DataFrame = {
-    val key = (System.identityHashCode(s), dir, corpusFingerprint(dir))
-    graft.CorpusFp.sweep(memo, (v: DataFrame) => v.sparkSession, key)
-    val hit = memo.get(key)
-    if (hit != null && (hit.sparkSession eq s)) hit
-    else { graft.BuildMeter.record(); val v = build; memo.put(key, v); v }
-  }
+    * memory trade the mhidx INDEX TABLE exists for).
+    * Keyed on the documents fingerprint, so an IN-PLACE fixture
+    * regeneration is a cache miss instead of a stale hit (ADVICE r6). */
+  private val candMemo = new graft.Memo.Pinned[DataFrame]("documents")
 
   private def corpusMinhashCandidates(s: SparkSession, dir: String,
                                       docs: DataFrame): DataFrame =
-    memoized(candMemo, s, dir) {
+    candMemo(s, dir) {
       val c = minhashCandidates(docs, cached = true)
       val pinned = c.localCheckpoint()
       c.unpersist(blocking = false)
@@ -520,12 +500,11 @@ object Dedup {
     * consumers: the Jaccard top-10, the containment top-10, and the
     * cluster-label edge set. Same lifecycle discipline as candMemo /
     * labelMemo (fingerprint-keyed, localCheckpoint-pinned). */
-  private val ngramCandMemo =
-    graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[(Int, String, Long), DataFrame]())
+  private val ngramCandMemo = new graft.Memo.Pinned[DataFrame]("documents")
 
   private[graft] def corpusNgramCandidates(s: SparkSession,
                                            dir: String): DataFrame =
-    memoized(ngramCandMemo, s, dir) {
+    ngramCandMemo(s, dir) {
       ngramCandidates(ngramDocs(s, dir)).localCheckpoint()
     }
 
@@ -684,11 +663,10 @@ object Dedup {
     * immutable). The memoized frame is localCheckpoint-backed (RDD
     * blocks, not catalog cache), so the per-query `clearCache()` between
     * bench/verify queries does not drop it. */
-  private val labelMemo =
-    graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[(Int, String, Long), DataFrame]())
+  private val labelMemo = new graft.Memo.Pinned[DataFrame]("documents")
 
   private[graft] def corpusClusterLabels(s: SparkSession, dir: String): DataFrame =
-    memoized(labelMemo, s, dir) {
+    labelMemo(s, dir) {
       clusterLabels(
         edgesFromCandidates(corpusNgramCandidates(s, dir), CLUSTER_JACCARD)
           .localCheckpoint())
@@ -1589,7 +1567,7 @@ object Dedup {
     // runtime stage profile shows the fanKey exchange is written once
     // (9.6 MB) and read twice (19.2 MB) — AQE stage reuse already feeds
     // both join sides from one seed build regardless of strategy. The
-    // SMJ pin benched flat (1.80 → 1.69–1.87 s, 4-pass Scratch).
+    // SMJ pin benched flat (1.80 → 1.69–1.87 s, 4-pass stage profile).
     val pairs = kept.as("x").join(kept.as("y"),
         col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),

@@ -83,23 +83,13 @@ object Graph {
     * query. Same per-(session, dir, fingerprint) lifecycle as
     * [[affinityEdges]]: first consumer pays (BuildMeter-flagged),
     * stopped sessions sweep out, an in-place fixture change is a miss. */
-  private val prMemo = graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Long), (DataFrame, Long)]())
+  private val prMemo = new graft.Memo.Pinned[(DataFrame, Long)]("lineitem")
 
-  private def copurchasePrep(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val key = (System.identityHashCode(s), dir, lineitemFingerprint(dir))
-    graft.CorpusFp.sweep(prMemo, (v: (DataFrame, Long)) => v._1.sparkSession,
-      key)
-    val hit = prMemo.get(key)
-    if (hit != null && (hit._1.sparkSession eq s)) hit
-    else {
-      graft.BuildMeter.record()
-      val v = prepareRankEdges(copurchaseEdges(
+  private def copurchasePrep(s: SparkSession, dir: String): (DataFrame, Long) =
+    prMemo(s, dir) {
+      prepareRankEdges(copurchaseEdges(
         Tables.lineitem(s, dir).select("l_orderkey", "l_partkey")))
-      prMemo.put(key, v)
-      v
     }
-  }
 
   /** Core power iteration over a directed edge list (src, dst) — possibly
     * with duplicate pairs, deduplicated here AFTER partitioning — whose
@@ -269,28 +259,16 @@ object Graph {
     * shared once-per-corpus builds (the Dedup cand/label-memo pattern,
     * same lifecycle guards): pinned as narrow (a, b) id-pair blocks via
     * localCheckpoint, first consumer pays, an in-place fixture
-    * regeneration is a cache miss, stopped sessions sweep out, and an
-    * identity-hash collision rebuilds instead of serving a dead frame. */
-  private val edgeMemo =
-    graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[(Int, String, Long), DataFrame]())
+    * regeneration is a cache miss, stopped sessions sweep out, and a
+    * stale entry releases its own blocks ([[graft.Memo]]). */
+  private val edgeMemo = new graft.Memo.Pinned[DataFrame]("lineitem")
 
-  private def lineitemFingerprint(dir: String): Long =
-    graft.CorpusFp.of(dir, "lineitem")
-
-  private[graft] def affinityEdges(s: SparkSession, dir: String): DataFrame = {
-    val key = (System.identityHashCode(s), dir, lineitemFingerprint(dir))
-    graft.CorpusFp.sweep(edgeMemo, (v: DataFrame) => v.sparkSession, key)
-    val hit = edgeMemo.get(key)
-    if (hit != null && (hit.sparkSession eq s)) hit
-    else {
-      graft.BuildMeter.record()
-      val v = affinityEdgesOn(
+  private[graft] def affinityEdges(s: SparkSession, dir: String): DataFrame =
+    edgeMemo(s, dir) {
+      affinityEdgesOn(
         Tables.lineitem(s, dir).select("l_orderkey", "l_partkey"))
         .localCheckpoint()
-      edgeMemo.put(key, v)
-      v
     }
-  }
 
   def triangles(s: SparkSession, dir: String): DataFrame =
     trianglesOn(affinityEdges(s, dir))
@@ -1016,22 +994,11 @@ object Graph {
     * evaluation is the per-query cost (the [[affinityEdges]] memo
     * lifecycle: BuildMeter-flagged, stopped sessions swept, fixture
     * change = miss). */
-  private val trainEdgeMemo =
-    graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[(Int, String, Long), DataFrame]())
+  private val trainEdgeMemo = new graft.Memo.Pinned[DataFrame]("lineitem")
 
   private def trainEdges(s: SparkSession, dir: String,
-                         train: DataFrame): DataFrame = {
-    val key = (System.identityHashCode(s), dir, lineitemFingerprint(dir))
-    graft.CorpusFp.sweep(trainEdgeMemo, (v: DataFrame) => v.sparkSession, key)
-    val hit = trainEdgeMemo.get(key)
-    if (hit != null && (hit.sparkSession eq s)) hit
-    else {
-      graft.BuildMeter.record()
-      val v = affinityEdgesOn(train).localCheckpoint()
-      trainEdgeMemo.put(key, v)
-      v
-    }
-  }
+                         train: DataFrame): DataFrame =
+    trainEdgeMemo(s, dir)(affinityEdgesOn(train).localCheckpoint())
 
   def assocEval(s: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(s, dir).select("l_orderkey", "l_partkey")
@@ -1048,7 +1015,7 @@ object Graph {
     val und = if (und0 != null) und0 else affinityEdgesOn(train)
     // MEASURED LOSER (r15, do not re-try): fanKey on this basket
     // aggregate + an eager localCheckpoint of the test baskets below —
-    // the Scratch profile showed 1-task reduce stages, but the full
+    // the stage profile showed 1-task reduce stages, but the full
     // interleaved bench measured the combination +9%/+20% drift-adjusted
     // in two independent runs; the branchy original overlaps its
     // recomputes better than the pinned shape serializes. Reverted.

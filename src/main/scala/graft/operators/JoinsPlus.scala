@@ -662,7 +662,7 @@ object JoinsPlus {
     // keys for exact membership, and aggregate once. hits = K ⇔ the old
     // inner-join count of K (duplicate positions each count in both
     // spellings); the t flag replicates the left-semi exactly. Local
-    // wall-clock is FLAT (1.38 s min both shapes, 6-pass Scratch) — the
+    // wall-clock is FLAT (1.38 s min both shapes, 6-pass profile) — the
     // win is the scale posture: the fact-sized probe cache (§5 memory
     // pressure at 100 TB) and two of the three full passes over it drop
     // out, and the stage count roughly halves.

@@ -269,29 +269,19 @@ object Profiling {
     * (source + 32-char md5), first consumer pays (BuildMeter-flagged),
     * stopped sessions sweep out, in-place fixture change is a miss.
     * At 100 TB this is the write-the-pair-table-once step. */
-  private val shPairMemo = graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Long), DataFrame]())
+  private val shPairMemo = new graft.Memo.Pinned[DataFrame]("documents")
 
-  private def sourceShinglePairs(s: SparkSession, dir: String): DataFrame = {
-    val key =
-      (System.identityHashCode(s), dir, graft.CorpusFp.of(dir, "documents"))
-    graft.CorpusFp.sweep(shPairMemo, (v: DataFrame) => v.sparkSession, key)
-    val hit = shPairMemo.get(key)
-    if (hit != null && (hit.sparkSession eq s)) hit
-    else {
-      graft.BuildMeter.record()
+  private def sourceShinglePairs(s: SparkSession, dir: String): DataFrame =
+    shPairMemo(s, dir) {
       graft.functions.GraftFunctions.register(s)
-      val v = Tables.documents(s, dir)
+      Tables.documents(s, dir)
         .select(col("source"),
           explode(expr("array_distinct(word_shingles(split(text, ' '), 3))"))
             .as("g"))
         .select(col("source"), md5(col("g")).as("h"))
         .distinct()
         .localCheckpoint()
-      shPairMemo.put(key, v)
-      v
     }
-  }
 
   def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
     val sh = sourceShinglePairs(s, dir)
@@ -721,21 +711,13 @@ object Profiling {
   /** Memoized Spearman rank-table build: the (cname, v, tw, prefix)
     * VALUE-DOMAIN table + the fact census, per (session, dir,
     * fingerprint), pinned via localCheckpoint (the affinityEdges
-    * lifecycle — survives callers' clearCache; collisions rebuild,
-    * stopped sessions sweep out). */
-  private val spearmanMemo = graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Long), (DataFrame, Long)]())
+    * lifecycle — survives callers' clearCache, stopped sessions sweep
+    * out). */
+  private val spearmanMemo = new graft.Memo.Pinned[(DataFrame, Long)]("lineitem")
 
   private def spearmanRankTable(s: SparkSession, dir: String,
-                                base: DataFrame): (DataFrame, Long) = {
-    val key =
-      (System.identityHashCode(s), dir, graft.CorpusFp.of(dir, "lineitem"))
-    graft.CorpusFp.sweep(spearmanMemo,
-      (v: (DataFrame, Long)) => v._1.sparkSession, key)
-    val hit = spearmanMemo.get(key)
-    if (hit != null && (hit._1.sparkSession eq s)) hit
-    else {
-      graft.BuildMeter.record()
+                                base: DataFrame): (DataFrame, Long) =
+    spearmanMemo(s, dir) {
       val shortNames = Seq("d", "p", "q", "t")
       // fanKey (r15): the 4-way explode + (cname, v) partial aggregate ran
       // on the fixture's single scan split in the first-touch build
@@ -750,11 +732,8 @@ object Profiling {
       val pre = DistNtile.withPrefixSum(longVals,
         Seq(col("cname").asc, col("v").asc), col("tw"), "s")
         .localCheckpoint()
-      val v = (pre, base.count())
-      spearmanMemo.put(key, v)
-      v
+      (pre, base.count())
     }
-  }
 
   def spearmanMatrix(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.Column

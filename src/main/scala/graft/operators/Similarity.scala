@@ -279,11 +279,9 @@ object Similarity {
     * PLAIN DRIVER DATA — ids and 4dp-rounded scores, model-sized, no
     * session reference — so they're safe to serve to any session (the
     * [[trainedProbe]] precedent). */
-  private val truthMemo =
-    graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[
-      (String, String),
-      (org.apache.spark.sql.types.StructType,
-        Array[org.apache.spark.sql.Row])]())
+  private val truthMemo = new graft.Memo.Local[
+    (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])](
+    "embeddings")
 
   /** The exact cosine top-[[TRUTH_K]] for every batch query, as a local
     * relation off the memo. `q_sim_topk`, `q_sim_topk_batch`,
@@ -294,15 +292,11 @@ object Similarity {
     * truth side is exactly this shape: a sampled query batch scored
     * once, then reused by every evaluation that needs it. */
   private[graft] def bruteTruth(s: SparkSession, dir: String): DataFrame = {
-    val key = (dir, dataFingerprint(dir, "embeddings"))
-    var hit = truthMemo.get(key)
-    if (hit == null) {
-      graft.BuildMeter.record()
+    val (schema, rows) = truthMemo(s, dir) {
       val df = bruteTruthCompute(s, dir, TRUTH_K)
-      hit = (df.schema, df.collect())
-      truthMemo.put(key, hit)
+      (df.schema, df.collect())
     }
-    s.createDataFrame(java.util.Arrays.asList(hit._2: _*), hit._1)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Registered batch top-k — served from the [[bruteTruth]] memo. */
@@ -1009,7 +1003,7 @@ object Similarity {
     val bucketTok =
       if (bucketCols.isEmpty) ""
       else s"b$nBuckets" + bucketCols.map(_.take(1)).mkString
-    val fp = s"${dataFingerprint(dir, srcTable)}v$INDEX_ALGO_VER$bucketTok"
+    val fp = s"${graft.Memo.fingerprintHex(dir, srcTable)}v$INDEX_ALGO_VER$bucketTok"
     val name = s"${kind}_${tag}_$fp"
     val tbl = s"$db.$name"
     if (!s.catalog.tableExists(tbl)) {
@@ -1074,31 +1068,6 @@ object Similarity {
       }
     }
     tbl
-  }
-
-  /** Fingerprint of a source table's on-disk parquet: file count, total
-    * bytes, and max mtime folded into one hex token. Cheap (metadata
-    * only), and any regeneration of the fixture changes it. */
-  private def dataFingerprint(dir: String, table: String): String = {
-    val p = java.nio.file.Paths.get(dir, s"$table.parquet")
-    val (n, bytes, mtime) =
-      if (java.nio.file.Files.isDirectory(p)) {
-        val st = java.nio.file.Files.walk(p)
-        try {
-          val fs = st.filter(java.nio.file.Files.isRegularFile(_))
-            .toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
-          (fs.size.toLong,
-           fs.map(java.nio.file.Files.size).sum,
-           fs.map(f => java.nio.file.Files.getLastModifiedTime(f).toMillis)
-             .foldLeft(0L)(math.max))
-        } finally st.close()
-      } else if (java.nio.file.Files.exists(p)) {
-        (1L, java.nio.file.Files.size(p),
-         java.nio.file.Files.getLastModifiedTime(p).toMillis)
-      } else (0L, 0L, 0L)
-    java.lang.Long.toHexString(
-      java.util.Objects.hash(Long.box(n), Long.box(bytes), Long.box(mtime))
-        .toLong & 0xffffffffL)
   }
 
   /** Build — once per (sf-dir, data fingerprint) per JVM — the IVF layout:
@@ -2316,26 +2285,16 @@ object Similarity {
     * safe to serve to ANY session — the census and the calibration table
     * share one training run (the memoized-cluster-label precedent),
     * instead of each paying the R aggregation rounds. */
-  private val probeMemo =
-    graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[
-      (String, String),
-      (Array[Long], Seq[(Int, Long)], Long, Seq[Array[Long]])]())
+  private val probeMemo = new graft.Memo.Local[
+    (Array[Long], Seq[(Int, Long)], Long, Seq[Array[Long]])]("embeddings")
 
   private def trainedProbe(s: SparkSession, dir: String)
-      : (Array[Long], Seq[(Int, Long)], Long, Seq[Array[Long]]) = {
-    val key = (dir, dataFingerprint(dir, "embeddings"))
-    val hit = probeMemo.get(key)
-    if (hit != null) hit
-    else {
-      graft.BuildMeter.record()
+      : (Array[Long], Seq[(Int, Long)], Long, Seq[Array[Long]]) =
+    probeMemo(s, dir) {
       val feats = probeFeatures(s, dir).cache()
-      try {
-        val v = trainProbe(s, feats)
-        probeMemo.put(key, v)
-        v
-      } finally feats.unpersist(blocking = false)
+      try trainProbe(s, feats)
+      finally feats.unpersist(blocking = false)
     }
-  }
 
   /** The (vec_id, y, xi) feature frame of the probe task. */
   private def probeFeatures(s: SparkSession, dir: String): DataFrame =

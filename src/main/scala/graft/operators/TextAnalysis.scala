@@ -799,8 +799,11 @@ object TextAnalysis {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("c"))
     // corpus size: driver scalar at plan-build (same footing as tfidf's N)
+    // a NULL text contributes no terms: coalesce its size to 0 so the
+    // sum never sees NULL (Σ tf over explode(split(NULL)) is empty too)
     val t = Tables.documents(s, dir)
-      .select(size(split(col("text"), " ")).cast("long").as("n"))
+      .select(coalesce(size(split(col("text"), " ")), lit(0)).cast("long")
+        .as("n"))
       .agg(sum("n")).collect()(0).getLong(0)
     val wTerm = org.apache.spark.sql.expressions.Window.partitionBy("term")
     pairs
@@ -1073,17 +1076,11 @@ object TextAnalysis {
     * threshold and RE-SHUFFLES the whole pair table above it (measured:
     * 13 MB shuffle at the 10× step but 387 MB at 40× — the broadcast
     * cliff); the one build-time exchange amortizes across consumers. */
-  private val bigramMemo = graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Long), DataFrame]())
+  private val bigramMemo = new graft.Memo.Pinned[DataFrame]("documents")
 
-  private[graft] def docBigrams(s: SparkSession, dir: String): DataFrame = {
-    val key = (System.identityHashCode(s), dir, docsFingerprint(dir))
-    graft.CorpusFp.sweep(bigramMemo, (v: DataFrame) => v.sparkSession, key)
-    val hit = bigramMemo.get(key)
-    if (hit != null && (hit.sparkSession eq s)) hit
-    else {
-      graft.BuildMeter.record()
-      val v = Tables.documents(s, dir)
+  private[graft] def docBigrams(s: SparkSession, dir: String): DataFrame =
+    bigramMemo(s, dir) {
+      Tables.documents(s, dir)
         .withColumn("toks", split(col("text"), " "))
         .select(col("doc_id"),
           expr(
@@ -1096,10 +1093,7 @@ object TextAnalysis {
         .groupBy("doc_id", "w1", "w2").agg(count(lit(1)).as("c"))
         .repartition(col("w1"), col("w2"))
         .localCheckpoint()
-      bigramMemo.put(key, v)
-      v
     }
-  }
 
   def pmiCollocations(s: SparkSession, dir: String): DataFrame = {
     // corpus-level pair counts = the memoized doc-level table re-agged
@@ -1964,29 +1958,16 @@ object TextAnalysis {
     * parameters) per (session, dir, fingerprint) — training is
     * once-per-corpus ingest work (the probe-training precedent); only
     * holdout scoring is the per-query cost. */
-  private val nbMemo = graft.MemoSweep.register(new java.util.concurrent.ConcurrentHashMap[
-    (Int, String, Long), (DataFrame, DataFrame)]())
-
-  private def docsFingerprint(dir: String): Long =
-    graft.CorpusFp.of(dir, "documents")
+  private val nbMemo = new graft.Memo.Pinned[(DataFrame, DataFrame)]("documents")
 
   def naiveBayes(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"))
-    val key = (System.identityHashCode(s), dir, docsFingerprint(dir))
-    graft.CorpusFp.sweep(nbMemo,
-      (v: (DataFrame, DataFrame)) => v._1.sparkSession, key)
-    val hit = nbMemo.get(key)
-    val model =
-      if (hit != null && (hit._1.sparkSession eq s)) hit
-      else {
-        graft.BuildMeter.record()
-        val (adj, params) =
-          trainNaiveBayes(docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0))
-        val v = (adj.localCheckpoint(), params.localCheckpoint())
-        nbMemo.put(key, v)
-        v
-      }
+    val model = nbMemo(s, dir) {
+      val (adj, params) =
+        trainNaiveBayes(docs.filter(pmod(col("doc_id"), lit(5L)) =!= 0))
+      (adj.localCheckpoint(), params.localCheckpoint())
+    }
     scoreNaiveBayes(docs.filter(pmod(col("doc_id"), lit(5L)) === 0),
       model._1, model._2)
   }

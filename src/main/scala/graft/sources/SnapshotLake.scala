@@ -1799,32 +1799,9 @@ object SnapshotLake {
     * function of the documents table, so DuckDB can replay each
     * snapshot's state from filters alone — the oracle checks time travel
     * itself, not just the final state. */
-  /** Fingerprint of a fixture's documents parquet (count, bytes, max
-    * mtime) — folded into lab-table names so an in-place fixture
-    * regeneration rebuilds instead of serving stale snapshots. */
-  private def docsFingerprint(dir: String): String = {
-    val p = Paths.get(dir, "documents.parquet")
-    val (n, bytes, mtime) =
-      if (Files.isDirectory(p)) {
-        val st = Files.walk(p)
-        try {
-          val fs = st.filter(Files.isRegularFile(_))
-            .toArray.toSeq.map(_.asInstanceOf[Path])
-          (fs.size.toLong, fs.map(Files.size).sum,
-            fs.map(f => Files.getLastModifiedTime(f).toMillis)
-              .foldLeft(0L)(math.max))
-        } finally st.close()
-      } else if (Files.exists(p))
-        (1L, Files.size(p), Files.getLastModifiedTime(p).toMillis)
-      else (0L, 0L, 0L)
-    java.lang.Long.toHexString(
-      java.util.Objects.hash(Long.box(n), Long.box(bytes), Long.box(mtime))
-        .toLong & 0xffffffffL)
-  }
-
   private[graft] def ensureTimeline(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
-    val fp = docsFingerprint(dir)
+    val fp = graft.Memo.fingerprintHex(dir, "documents")
     val base = Paths.get(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "graft_snap")
     val root = base.resolve(s"docs_${tag}_$fp")
@@ -2168,7 +2145,8 @@ object SnapshotLake {
     val base = Paths.get(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       "graft_snap_branch")
-    val root = base.resolve(s"docs_${tag}_${docsFingerprint(dir)}")
+    val root = base.resolve(
+      s"docs_${tag}_${graft.Memo.fingerprintHex(dir, "documents")}")
     this.synchronized {
       if (currentVersion(root.toString) < 3) {
         graft.BuildMeter.record()
@@ -2239,7 +2217,8 @@ object SnapshotLake {
     val base = Paths.get(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       "graft_snap_partevo")
-    val root = base.resolve(s"docs_${tag}_${docsFingerprint(dir)}")
+    val root = base.resolve(
+      s"docs_${tag}_${graft.Memo.fingerprintHex(dir, "documents")}")
     this.synchronized {
       if (currentVersion(root.toString) < 7) {
         graft.BuildMeter.record()
@@ -2274,13 +2253,16 @@ object SnapshotLake {
     * append (%6=5, one file per clock hour). The table declares TWO
     * stats columns (`event_id,user_id`) so every staged file carries a
     * per-column min/max pair in the manifest — the multi-predicate
-    * file-skipping surface [[readRangeOn]] serves. */
+    * file-skipping surface [[readRangeOn]] serves. Named by the EVENTS
+    * fingerprint, the table it is built from: an in-place events
+    * rewrite rebuilds the lab. */
   private[graft] def ensureDateLab(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
     val base = Paths.get(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       "graft_snap_datelab")
-    val root = base.resolve(s"ev_${tag}_${docsFingerprint(dir)}")
+    val root = base.resolve(
+      s"ev_${tag}_${graft.Memo.fingerprintHex(dir, "events")}")
     this.synchronized {
       if (currentVersion(root.toString) < 7) {
         graft.BuildMeter.record()
@@ -2427,7 +2409,7 @@ object SnapshotLake {
     * state (manifests {2, 4, 5} — v1/v3 dropped, v2 tag-pinned). */
   private[graft] def ensureExpireLab(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
-    val fp = docsFingerprint(dir)
+    val fp = graft.Memo.fingerprintHex(dir, "documents")
     val base = Paths.get(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       "graft_snap")
@@ -2511,7 +2493,8 @@ object SnapshotLake {
     val base = Paths.get(
       s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       "graft_snap_binpack")
-    val root = base.resolve(s"docs_${tag}_${docsFingerprint(dir)}")
+    val root = base.resolve(
+      s"docs_${tag}_${graft.Memo.fingerprintHex(dir, "documents")}")
     this.synchronized {
       if (currentVersion(root.toString) < 5) {
         graft.BuildMeter.record()

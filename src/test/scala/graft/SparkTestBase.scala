@@ -11,15 +11,21 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  private var current: SparkSession = _
+
+  /** The shared session, rebuilt if a spec stopped it (MemoSpec stops
+    * one to check that its memo entries are never served again). */
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) {
+      current = SparkSession.builder()
+        .master("local[8]")
+        .appName("graft-test")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+      current.sparkContext.setLogLevel("WARN")
+    }
+    current
   }
 }
