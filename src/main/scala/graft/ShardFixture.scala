@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.io.IOException
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
 
@@ -30,25 +31,42 @@ object ShardFixture {
   /** Bump on any derivation change (forces a rebuild). */
   val VER = "v1"
 
-  /** Build (or reuse) the re-sharded twin of `baseDir`; returns its
-    * path. Marker-keyed on the base tables' file stats + [[VER]], the
-    * [[ScaleFixture]] lifecycle. */
-  def ensure(spark: SparkSession, baseDir: String): String = {
+  /** Where twins are published, resolved to an absolute path once so a
+    * later working-directory change cannot split the cache. */
+  private lazy val Root: Path = Paths.get("target").toAbsolutePath
+
+  /** Build (or reuse) the re-sharded twin of `baseDir` under `root`;
+    * returns its path. Marker-keyed on the base tables' file stats +
+    * [[VER]] (the [[ScaleFixture]] fingerprint), which also names the
+    * directory: a published twin is never rewritten in place. A build
+    * lands in a sibling temp dir and is published by one atomic rename,
+    * so a reader never sees a half-built twin; when concurrent builders
+    * race, the loser finds the winner's marker and discards its copy. */
+  def ensure(spark: SparkSession, baseDir: String, root: Path = Root): String = {
     val parts = ScaleFixture.OUT_PARTS
     val tag = baseDir.replaceAll("[^a-zA-Z0-9.]", "_").stripPrefix("_")
-    val dir = s"target/shard${parts}_$tag"
-    val marker = Paths.get(dir, "_built")
     val fp = ScaleFixture.fingerprint(baseDir, Tables.names, 1,
       s"|shard$VER")
-    if (Files.exists(marker) && Files.readString(marker) == fp) return dir
-    Tables.names.foreach { t =>
-      val df =
-        if (t == "events") Tables.events(spark, baseDir)
-        else Tables.t(spark, baseDir, t)
-      df.repartition(parts)
-        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    val dir = root.resolve(f"shard${parts}_${tag}_${fp.hashCode}%08x")
+    val marker = dir.resolve("_built")
+    def published = Files.exists(marker) && Files.readString(marker) == fp
+    if (!published) {
+      Files.createDirectories(root)
+      val tmp = Files.createTempDirectory(root, s".${dir.getFileName}.")
+      Tables.names.foreach { t =>
+        val df =
+          if (t == "events") Tables.events(spark, baseDir)
+          else Tables.t(spark, baseDir, t)
+        df.repartition(parts)
+          .write.mode("overwrite").parquet(tmp.resolve(s"$t.parquet").toString)
+      }
+      Files.writeString(tmp.resolve("_built"), fp)
+      try Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+      catch {
+        case _: IOException if published =>
+          graft.sources.SnapshotLake.deleteRecursively(tmp)
+      }
     }
-    Files.writeString(marker, fp)
-    dir
+    dir.toString
   }
 }

@@ -24,24 +24,28 @@ import graft.operators.Dedup
   *     band rows to the index so the next batch dedups against them.
   *
   * The job is idempotent: re-appending the same batch finds every doc
-  * self-matched in the index (est 1.0) and appends nothing. Work per
-  * append is O(batch + matched index buckets) — the corpus is never
-  * rescanned (spec-asserted via the probe's plan in PlanShapeSpec's
-  * incremental test; this job reuses that exact probe).
+  * self-matched in the index (est 1.0) and appends nothing. An append
+  * scans the whole index once (the probe; the corpus text is never
+  * touched) and adds at most 16 files per table, one per bucket its
+  * novel docs land in.
   *
   * The job owns its tables (`<db>.docs_corpus`, `<db>.docs_mhidx`) rather
   * than sharing [[Dedup.ensureMinhashIndexTable]]'s fingerprinted table:
   * an append MUTATES the index, and the registered q_dedup_incremental
   * query's oracle assumes a pristine one.
   *
-  * Layout trade-off vs the read-mostly probe index: docs_mhidx stays
-  * `partitionBy(band, nib)` because upsert/delete rewrite ONLY the hit
-  * partitions (dynamic partition overwrite — the O(delta) CRUD
-  * property), which bucket files wouldn't give; the price is that a
-  * probe against it shuffles the index side once the batch outgrows the
-  * broadcast threshold. The fingerprinted ensureMinhashIndexTable is the
-  * opposite trade: `bucketBy(16, band, nib, key)`, exchange-free probes,
-  * rebuild-on-change instead of in-place mutation. Pick by workload.
+  * Layout trade-off: both tables partition by the doc's own hash bucket
+  * `pbk = pmod(doc_id, 16)`, the plain-parquet stand-in for the
+  * reference's Iceberg `bucket(16, col)` transform. Every row of a doc,
+  * corpus or index, lives in that doc's bucket, so upsert/delete rewrite
+  * exactly the buckets they hit in both tables (dynamic partition
+  * overwrite — the O(delta) CRUD property). The price is that the probe
+  * joins on (band, nib, key), which `pbk` cannot prune: every append
+  * reads the whole index, and the index side shuffles once the batch
+  * outgrows the broadcast threshold. The fingerprinted
+  * ensureMinhashIndexTable is the opposite trade: `bucketBy(16, band,
+  * nib, key)`, exchange-free probes, rebuild-on-change instead of
+  * in-place mutation. Pick by workload.
   */
 object AppendJob {
 
@@ -53,7 +57,9 @@ object AppendJob {
   val NEAR_DUP_EST = 0.5
 
   /** Seed the lake if absent: write the corpus table and its MinHash band
-    * index — the single time the corpus is shingled. */
+    * index — the single time the corpus is shingled. A lake whose index
+    * still has the earlier `(band, nib)` partitioning is re-keyed on
+    * `pbk` once, row for row (no re-shingling, no re-capping). */
   def seed(spark: SparkSession, corpus: DataFrame,
            db: String = "graft_lake"): Unit = {
     val corpusTbl = s"$db.docs_corpus"
@@ -61,7 +67,6 @@ object AppendJob {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     if (!spark.catalog.tableExists(corpusTbl)) {
       dropStale(spark, db, "docs_corpus")
-      dropStale(spark, db, "docs_mhidx")
       // the corpus partitions by a doc_id hash bucket so UPSERTS rewrite
       // only touched buckets (dynamic partition overwrite), never the
       // whole corpus — the plain-parquet stand-in for Iceberg's MERGE
@@ -69,11 +74,23 @@ object AppendJob {
         .partitionBy("pbk")
         .saveAsTable(corpusTbl)
       // the one full shingle pass over the corpus, paid at seed time
-      Dedup.minhashBandRows(withShingles(corpus), cap = Some(Dedup.BUCKET_CAP))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("band", "nib")
-        .saveAsTable(idxTbl)
+      writeIndex(spark, db, withBucket(
+        Dedup.minhashBandRows(withShingles(corpus), cap = Some(Dedup.BUCKET_CAP))))
+    } else if (spark.catalog.tableExists(idxTbl) &&
+        !spark.catalog.listColumns(idxTbl).collect()
+          .exists(c => c.isPartition && c.name == "pbk")) {
+      writeIndex(spark, db, withBucket(spark.table(idxTbl)).localCheckpoint())
     }
+  }
+
+  /** (Re)write the whole index table from `rows`, partitioned by the doc
+    * bucket. A `rows` read from the index itself must be materialized
+    * (localCheckpoint) first: the old files are deleted before the write. */
+  private def writeIndex(spark: SparkSession, db: String, rows: DataFrame): Unit = {
+    dropStale(spark, db, "docs_mhidx")
+    rows.write.mode(SaveMode.Overwrite)
+      .partitionBy("pbk")
+      .saveAsTable(s"$db.docs_mhidx")
   }
 
   /** Probe-and-append one batch DataFrame against the seeded lake: drop
@@ -106,7 +123,7 @@ object AppendJob {
     // positional; partition columns sit last in the table schema)
     withBucket(novel).select(spark.table(corpusTbl).columns.map(col): _*)
       .write.mode(SaveMode.Append).insertInto(corpusTbl)
-    Dedup.minhashBandRows(withShingles(novel), cap = None)
+    withBucket(Dedup.minhashBandRows(withShingles(novel), cap = None))
       .select(spark.table(idxTbl).columns.map(col): _*)
       .write.mode(SaveMode.Append).insertInto(idxTbl)
     // after-count is arithmetic, not a second corpus scan
@@ -126,14 +143,6 @@ object AppendJob {
       db, threshold)
   }
 
-  /** Index compaction — the maintenance pass that pairs with append:
-    * appends extend band buckets UNCAPPED (re-evaluating the hot-bucket
-    * cap across old+new rows on every append would rescan the index), so
-    * after a run of appends some buckets may exceed [[Dedup.BUCKET_CAP]].
-    * Compaction rewrites the index keeping only within-cap buckets —
-    * restoring the probe-cost bound — and returns how many buckets it
-    * dropped. The rewrite materializes via localCheckpoint before
-    * overwriting, so the read never races its own overwrite. */
   /** Corpus small-file compaction (the OPTIMIZE pass): every append adds
     * a file per touched bucket, so a long-lived lake accumulates
     * file-per-batch fragmentation — the classic small-files problem that
@@ -176,6 +185,14 @@ object AppendJob {
     overFull.length.toLong
   }
 
+  /** Index compaction — the maintenance pass that pairs with append:
+    * appends extend band buckets UNCAPPED (re-evaluating the hot-bucket
+    * cap across old+new rows on every append would rescan the index), so
+    * after a run of appends some buckets may exceed [[Dedup.BUCKET_CAP]].
+    * Compaction rewrites the index keeping only within-cap buckets —
+    * restoring the probe-cost bound — and returns how many buckets it
+    * dropped. The rewrite materializes via localCheckpoint before
+    * overwriting, so the read never races its own overwrite. */
   def compactIndex(spark: SparkSession, db: String = "graft_lake",
                    cap: Long = Dedup.BUCKET_CAP): Long = {
     val idxTbl = s"$db.docs_mhidx"
@@ -186,83 +203,36 @@ object AppendJob {
     val dropped = sizes.filter(col("bn") > cap).count()
     if (dropped > 0) {
       val keep = sizes.filter(col("bn") <= cap).select("band", "key")
-      val compacted = spark.table(idxTbl)
+      writeIndex(spark, db, spark.table(idxTbl)
         .join(keep, Seq("band", "key"))
         .select(cols.map(col): _*)
-        .localCheckpoint()
-      dropStale(spark, db, "docs_mhidx")
-      compacted.write.mode(SaveMode.Overwrite)
-        .partitionBy("band", "nib")
-        .saveAsTable(idxTbl)
+        .localCheckpoint())
     }
     dropped
   }
 
   final case class UpsertReport(
       nUpserts: Long, nUpdated: Long, nInserted: Long,
-      corpusBucketsRewritten: Long, idxPartsRewritten: Long,
-      idxPartsDropped: Long)
+      corpusBucketsRewritten: Long, idxBucketsRewritten: Long)
 
   /** Upsert a batch of documents by doc_id — the MERGE INTO the
     * reference's Iceberg DDL implies (`job1:223-275` declares merge-able
     * tables but every job write is a full overwrite), expressed on plain
-    * partitioned parquet via DYNAMIC partition overwrite:
-    *
-    *  - corpus: only the hash buckets containing an upserted doc are
-    *    rewritten (remaining rows of each touched bucket ∪ the upserts);
-    *    untouched buckets' files are never read or written.
-    *  - index: only the (band, nib) partitions holding an updated doc's
-    *    OLD band rows — or receiving new ones — are rewritten, so stale
-    *    signatures can never produce false near-dup hits against
-    *    replaced text. A touched partition whose rows all belonged to
-    *    updated docs receives no new data, which dynamic overwrite would
-    *    silently SKIP (the classic stale-partition pitfall); those are
-    *    dropped explicitly.
-    *
-    * At 100 TB the rewrite cost is O(touched partitions), not O(corpus):
-    * the update path reads back only the buckets/partitions it replaces. */
+    * partitioned parquet via DYNAMIC partition overwrite: in both tables
+    * only the hash buckets containing an upserted doc are rewritten
+    * (remaining rows of each touched bucket ∪ the upserts' new rows).
+    * An updated doc's old index rows live in its own bucket, so they are
+    * replaced with it and stale signatures can never produce false
+    * near-dup hits against replaced text. Untouched buckets' files are
+    * never read or written: at 100 TB the cost is O(touched buckets),
+    * not O(corpus). */
   def upsertDocuments(spark: SparkSession, updates: DataFrame,
                       db: String = "graft_lake"): UpsertReport = {
     val corpusTbl = s"$db.docs_corpus"
-    val idxTbl = s"$db.docs_mhidx"
     val up = withBucket(updates).localCheckpoint()
     val nUp = up.count()
     val upIds = up.select("doc_id")
-
-    // ---- corpus: rewrite only the touched buckets -----------------------
-    // touched-partition values collect to the driver (≤ N_BUCKETS ints)
-    // and re-enter as literal `isin` filters: a semi-JOIN on a partition
-    // column does not statically prune the scan, a literal filter does
-    // (PartitionFilters) — the whole point of the targeted rewrite
     val bucketVals = up.select("pbk").distinct().collect().map(_.getInt(0))
-    val corpusCols = spark.table(corpusTbl).columns
-    val keep = spark.table(corpusTbl)
-      .filter(col("pbk").isin(bucketVals.map(Int.box): _*))
-      .join(upIds, Seq("doc_id"), "left_anti")
-    val newCorpusRows = keep.select(corpusCols.map(col): _*)
-      .unionByName(up.select(corpusCols.map(col): _*))
-      .localCheckpoint()
-    val nBuckets = bucketVals.length.toLong
-
-    // ---- index: rewrite the partitions holding old rows or gaining new --
-    val oldRows = spark.table(idxTbl)
-      .join(upIds, Seq("doc_id"), "left_semi")
-    val newBandRows = Dedup.minhashBandRows(withShingles(up), cap = None)
-    val affected = oldRows.select("band", "nib")
-      .union(newBandRows.select("band", "nib")).distinct()
-      .localCheckpoint()
-    // ≤ BANDS × 16 pairs: coarse literal per-column pruning at the scan,
-    // the broadcast semi-join refines to the exact (band, nib) set
-    val affectedPairs = affected.collect().map(r => (r.getInt(0), r.getString(1)))
-    val idxCols = spark.table(idxTbl).columns
-    val newIdxRows = spark.table(idxTbl)
-      .filter(col("band").isin(affectedPairs.map(p => Int.box(p._1)).distinct: _*) &&
-        col("nib").isin(affectedPairs.map(_._2).distinct: _*))
-      .join(broadcast(affected), Seq("band", "nib"), "left_semi")
-      .join(upIds, Seq("doc_id"), "left_anti")
-      .select(idxCols.map(col): _*)
-      .unionByName(newBandRows.select(idxCols.map(col): _*))
-      .localCheckpoint()
     // retraction rows for the summary delta, captured BEFORE the
     // overwrite; also gives the updated-vs-inserted split without a
     // corpus-wide scan (an update's doc lives in a touched bucket by
@@ -272,42 +242,28 @@ object AppendJob {
       .join(upIds, Seq("doc_id"), "left_semi")
       .localCheckpoint()
     val nUpdated = retracted.count()
-
-    withDynamicOverwrite(spark) {
-      newCorpusRows.write.mode(SaveMode.Overwrite).insertInto(corpusTbl)
-      newIdxRows.write.mode(SaveMode.Overwrite).insertInto(idxTbl)
-    }
+    val (corpusN, _) = rewriteBuckets(spark, corpusTbl, bucketVals, upIds, Some(up))
+    val (idxN, _) = rewriteBuckets(spark, s"$db.docs_mhidx", bucketVals, upIds,
+      Some(withBucket(Dedup.minhashBandRows(withShingles(up), cap = None))))
     applySummaryDelta(spark, db, plus = Some(up), minus = Some(retracted))
-
-    // partitions whose every row belonged to an updated doc got no new
-    // data — dynamic overwrite skipped them; drop the stale dirs
-    val written = newIdxRows.select("band", "nib").distinct()
-    val empties = affected.except(written).collect()
-    empties.foreach { r =>
-      spark.sql(s"ALTER TABLE $idxTbl DROP IF EXISTS PARTITION " +
-        s"(band=${r.getInt(0)}, nib='${r.getString(1)}')")
-    }
-    UpsertReport(nUp, nUpdated, nUp - nUpdated, nBuckets,
-      affected.count() - empties.length, empties.length.toLong)
+    UpsertReport(nUp, nUpdated, nUp - nUpdated, corpusN, idxN)
   }
 
   final case class DeleteReport(
       nRequested: Long, nDeleted: Long, corpusBucketsRewritten: Long,
-      corpusBucketsDropped: Long, idxPartsRewritten: Long,
-      idxPartsDropped: Long)
+      corpusBucketsDropped: Long, idxBucketsRewritten: Long,
+      idxBucketsDropped: Long)
 
   /** Delete documents by id — the GDPR/takedown path, completing the
     * lake's CRUD story (seed → append → upsert → delete → compact) on
     * plain partitioned parquet. Same targeted-rewrite discipline as
-    * [[upsertDocuments]]: only the corpus buckets and index (band, nib)
-    * partitions that actually hold a deleted doc are read and rewritten
-    * (literal partition filters at the scan), and partitions emptied by
-    * the delete are dropped explicitly rather than left stale by
-    * dynamic overwrite. Cost at 100 TB: O(partitions hit), not O(corpus). */
+    * [[upsertDocuments]]: only the buckets that actually hold a deleted
+    * doc are read and rewritten, in both tables, and buckets emptied by
+    * the delete are dropped. Cost at 100 TB: O(buckets hit), not
+    * O(corpus). */
   def deleteDocuments(spark: SparkSession, ids: DataFrame,
                       db: String = "graft_lake"): DeleteReport = {
     val corpusTbl = s"$db.docs_corpus"
-    val idxTbl = s"$db.docs_mhidx"
     val delIds = ids.select("doc_id").distinct().localCheckpoint()
     val nRequested = delIds.count()
 
@@ -317,49 +273,38 @@ object AppendJob {
       .localCheckpoint()
     val nDeleted = hit.count()
     val bucketVals = hit.select("pbk").distinct().collect().map(_.getInt(0))
-    val corpusCols = spark.table(corpusTbl).columns
-    val newCorpusRows = spark.table(corpusTbl)
-      .filter(col("pbk").isin(bucketVals.map(Int.box): _*))
-      .join(delIds, Seq("doc_id"), "left_anti")
-      .select(corpusCols.map(col): _*)
-      .localCheckpoint()
-
-    val affected = spark.table(idxTbl)
-      .join(delIds, Seq("doc_id"), "left_semi")
-      .select("band", "nib").distinct().localCheckpoint()
-    val affectedPairs = affected.collect().map(r => (r.getInt(0), r.getString(1)))
-    val idxCols = spark.table(idxTbl).columns
-    val newIdxRows = spark.table(idxTbl)
-      .filter(col("band").isin(affectedPairs.map(p => Int.box(p._1)).distinct: _*) &&
-        col("nib").isin(affectedPairs.map(_._2).distinct: _*))
-      .join(broadcast(affected), Seq("band", "nib"), "left_semi")
-      .join(delIds, Seq("doc_id"), "left_anti")
-      .select(idxCols.map(col): _*)
-      .localCheckpoint()
-
-    withDynamicOverwrite(spark) {
-      newCorpusRows.write.mode(SaveMode.Overwrite).insertInto(corpusTbl)
-      newIdxRows.write.mode(SaveMode.Overwrite).insertInto(idxTbl)
-    }
-    val writtenBuckets = newCorpusRows.select("pbk").distinct()
-      .collect().map(_.getInt(0)).toSet
-    val emptyBuckets = bucketVals.filterNot(writtenBuckets)
-    emptyBuckets.foreach { b =>
-      spark.sql(s"ALTER TABLE $corpusTbl DROP IF EXISTS PARTITION (pbk=$b)")
-    }
-    val writtenParts = newIdxRows.select("band", "nib").distinct()
-      .collect().map(r => (r.getInt(0), r.getString(1))).toSet
-    val emptyParts = affectedPairs.filterNot(writtenParts)
-    emptyParts.foreach { case (b, n) =>
-      spark.sql(s"ALTER TABLE $idxTbl DROP IF EXISTS PARTITION " +
-        s"(band=$b, nib='$n')")
-    }
+    val (corpusN, corpusDropped) =
+      rewriteBuckets(spark, corpusTbl, bucketVals, delIds, None)
+    val (idxN, idxDropped) =
+      rewriteBuckets(spark, s"$db.docs_mhidx", bucketVals, delIds, None)
     applySummaryDelta(spark, db, plus = None, minus = Some(hit))
-    DeleteReport(nRequested, nDeleted,
-      bucketVals.length.toLong - emptyBuckets.length,
-      emptyBuckets.length.toLong,
-      affectedPairs.length.toLong - emptyParts.length,
-      emptyParts.length.toLong)
+    DeleteReport(nRequested, nDeleted, corpusN, corpusDropped, idxN, idxDropped)
+  }
+
+  /** Dynamic-overwrite `buckets` of table `tbl` with their rows minus
+    * `dropIds`'s docs, plus `add`; then drop the buckets left empty
+    * (dynamic overwrite replaces only partitions that RECEIVE rows, so an
+    * emptied bucket would keep serving its stale files). The buckets
+    * enter as literal `isin` filters: a semi-JOIN on a partition column
+    * does not statically prune the scan, a literal filter does
+    * (PartitionFilters). Returns (buckets rewritten, buckets dropped). */
+  private def rewriteBuckets(spark: SparkSession, tbl: String,
+                             buckets: Seq[Int], dropIds: DataFrame,
+                             add: Option[DataFrame]): (Long, Long) = {
+    val cols = spark.table(tbl).columns.map(col)
+    val kept = spark.table(tbl)
+      .filter(col("pbk").isin(buckets.map(Int.box): _*))
+      .join(dropIds, Seq("doc_id"), "left_anti")
+      .select(cols: _*)
+    val rows = add.fold(kept)(a => kept.unionByName(a.select(cols: _*)))
+      .localCheckpoint()
+    withDynamicOverwrite(spark) {
+      rows.write.mode(SaveMode.Overwrite).insertInto(tbl)
+    }
+    val written = rows.select("pbk").distinct().collect().map(_.getInt(0)).toSet
+    val empty = buckets.filterNot(written)
+    empty.foreach(b => spark.sql(s"ALTER TABLE $tbl DROP IF EXISTS PARTITION (pbk=$b)"))
+    (buckets.length.toLong - empty.length, empty.length.toLong)
   }
 
   /** Incremental materialized aggregate: a per-(source, lang) census of
@@ -415,8 +360,9 @@ object AppendJob {
     finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** Corpus-side partition bucket: doc_id-hash partition column so
-    * point-ish rewrites (upserts) touch O(buckets-hit) files. */
+  /** The doc bucket: doc_id-hash partition column of both the corpus and
+    * the index, so point-ish rewrites (upserts, deletes) touch
+    * O(buckets-hit) files in each. */
   private val N_BUCKETS = 16
 
   private def withBucket(docs: DataFrame): DataFrame =

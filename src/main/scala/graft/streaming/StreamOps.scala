@@ -238,8 +238,8 @@ object StreamOps {
     * the index MUTATES as batches land — both outside what append-mode
     * stream joins can express, and exactly what the batch probe already
     * does. Caller seeds the lake first ([[graft.sources.AppendJob.seed]]).
-    * At scale each micro-batch costs O(batch + matched buckets); the
-    * corpus is never rescanned. */
+    * Each micro-batch scans the whole index once (the probe) and adds at
+    * most 16 files per table; the corpus is never rescanned. */
   def nearDupAppendSink(docs: DataFrame, db: String, checkpointDir: String,
                         threshold: Double = graft.sources.AppendJob.NEAR_DUP_EST)
       : org.apache.spark.sql.streaming.StreamingQuery = {

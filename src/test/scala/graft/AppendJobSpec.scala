@@ -12,6 +12,23 @@ class AppendJobSpec extends SparkTestBase {
 
   private val db = "graft_lake_test"
 
+  private def warehouse =
+    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+
+  /** (path, size, mtime) of every file in one `pbk` bucket of a table. */
+  private def fingerprint(lake: String, table: String, bucket: Int) = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(warehouse,
+      s"$lake.db", table, s"pbk=$bucket"))
+    try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(p => (p.toString, java.nio.file.Files.size(p),
+        java.nio.file.Files.getLastModifiedTime(p).toMillis)).toSet
+    finally s.close()
+  }
+
+  private def partitionCols(table: String) =
+    spark.catalog.listColumns(table).collect().filter(_.isPartition)
+      .map(_.name).toSeq
+
   test("append lands only novel docs and is idempotent on re-append") {
     AppendJob.reset(spark, db)
     val r1 = AppendJob.appendDocuments(spark, sfDir, db)
@@ -56,6 +73,7 @@ class AppendJobSpec extends SparkTestBase {
         case "band" => lit(0)
         case "key" => lit("hotbucketkey")
         case "nib" => lit("h")
+        case "pbk" => pmod(col("doc_id"), lit(16)).cast("int")
         case h => col("sig8").as(h)
       }: _*)
     hotRows.write.mode(org.apache.spark.sql.SaveMode.Append)
@@ -79,8 +97,8 @@ class AppendJobSpec extends SparkTestBase {
     AppendJob.seed(spark, docs, db2)
     val seedN = spark.table(s"$db2.docs_corpus").count()
 
-    // plant a stale index row in its own (band, nib) partition for an
-    // updated doc: the upsert must drop the emptied partition, not skip it
+    // plant a stale index row for updated doc 1, in its own bucket
+    // pbk=1: the upsert's rewrite of that bucket must drop it
     val idxTbl = s"$db2.docs_mhidx"
     val idxCols = spark.table(idxTbl).columns
     Seq((1L, "zz")).toDF("doc_id", "sig")
@@ -89,23 +107,15 @@ class AppendJobSpec extends SparkTestBase {
         case "band" => lit(99)
         case "key" => lit("plantedstalekey")
         case "nib" => lit("z")
+        case "pbk" => lit(1)
         case other => col("sig").as(other)
       }: _*)
       .write.mode(org.apache.spark.sql.SaveMode.Append).insertInto(idxTbl)
 
-    // untouched-bucket fingerprint: (path, size, mtime) of bucket pbk=5
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    val bucket5 = java.nio.file.Paths.get(warehouse, s"$db2.db",
-      "docs_corpus", "pbk=5")
-    def fingerprint() = {
-      val s = java.nio.file.Files.list(bucket5)
-      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .map(p => (p.toString, java.nio.file.Files.size(p),
-          java.nio.file.Files.getLastModifiedTime(p).toMillis)).toSet
-      finally s.close()
-    }
-    val before5 = fingerprint()
+    // untouched-bucket fingerprints of bucket pbk=5 in both tables
+    def fingerprint5() = Seq("docs_corpus", "docs_mhidx")
+      .map(fingerprint(db2, _, 5))
+    val before5 = fingerprint5()
 
     // 3 updates (ids 0,1,2 → buckets 0,1,2) with disjoint new vocabulary,
     // plus 2 inserts (ids 990000,990001 → buckets 0,1)
@@ -120,7 +130,8 @@ class AppendJobSpec extends SparkTestBase {
     assert(rep.nUpserts == 5 && rep.nUpdated == 3 && rep.nInserted == 2, s"$rep")
     assert(rep.corpusBucketsRewritten == 3, // buckets 0, 1, 2
       s"upsert must touch exactly the 3 hit buckets: $rep")
-    assert(rep.idxPartsDropped >= 1, s"planted stale partition must drop: $rep")
+    assert(rep.idxBucketsRewritten == 3, // same buckets in the index
+      s"upsert must rewrite exactly the 3 hit index buckets: $rep")
 
     // corpus: pure updates don't grow it, inserts do; text is replaced
     assert(spark.table(s"$db2.docs_corpus").count() == seedN + 2)
@@ -128,14 +139,14 @@ class AppendJobSpec extends SparkTestBase {
       .filter(col("doc_id") === 0L).select("text").collect()(0).getString(0)
     assert(newText0.startsWith("uuu0w1 "), s"doc 0 text not replaced: $newText0")
 
-    // untouched bucket: byte-identical file set
-    assert(fingerprint() == before5,
+    // untouched bucket: byte-identical file sets in both tables
+    assert(fingerprint5() == before5,
       "bucket pbk=5 was rewritten by an upsert that never touched it")
 
-    // index: stale rows gone (planted partition AND old signatures),
+    // index: stale rows gone (planted row AND old signatures),
     // new rows present for every upserted doc
     assert(spark.table(idxTbl).filter(col("band") === 99).count() == 0,
-      "emptied stale partition still readable")
+      "planted stale row still readable")
     val updatedRows = spark.table(idxTbl)
       .filter(col("doc_id").isin(0L, 1L, 2L, 990000L, 990001L))
       .groupBy("doc_id").count().collect()
@@ -153,23 +164,15 @@ class AppendJobSpec extends SparkTestBase {
     AppendJob.seed(spark, Tables.documents(spark, sfDir), db3)
     val seedN = spark.table(s"$db3.docs_corpus").count()
 
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    val bucket7 = java.nio.file.Paths.get(warehouse, s"$db3.db",
-      "docs_corpus", "pbk=7")
-    def fingerprint() = {
-      val s = java.nio.file.Files.list(bucket7)
-      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .map(p => (p.toString, java.nio.file.Files.size(p),
-          java.nio.file.Files.getLastModifiedTime(p).toMillis)).toSet
-      finally s.close()
-    }
-    val before7 = fingerprint()
+    def fingerprint7() = Seq("docs_corpus", "docs_mhidx")
+      .map(fingerprint(db3, _, 7))
+    val before7 = fingerprint7()
 
     // ids 3 and 20 live in buckets 3 and 4
     val rep = AppendJob.deleteDocuments(spark, Seq(3L, 20L).toDF("doc_id"), db3)
     assert(rep.nRequested == 2 && rep.nDeleted == 2, s"$rep")
-    assert(rep.corpusBucketsRewritten == 2 && rep.corpusBucketsDropped == 0,
+    assert(rep.corpusBucketsRewritten == 2 && rep.corpusBucketsDropped == 0 &&
+      rep.idxBucketsRewritten == 2 && rep.idxBucketsDropped == 0,
       s"delete must rewrite exactly the 2 hit buckets: $rep")
     assert(spark.table(s"$db3.docs_corpus").count() == seedN - 2)
     assert(spark.table(s"$db3.docs_corpus")
@@ -177,15 +180,78 @@ class AppendJobSpec extends SparkTestBase {
     assert(spark.table(s"$db3.docs_mhidx")
       .filter(col("doc_id").isin(3L, 20L)).count() == 0,
       "index must forget deleted docs (their text can no longer match)")
-    assert(fingerprint() == before7,
+    assert(fingerprint7() == before7,
       "bucket pbk=7 was rewritten by a delete that never touched it")
 
     // deleting a nonexistent id is a complete no-op
     val rep2 = AppendJob.deleteDocuments(spark, Seq(999999L).toDF("doc_id"), db3)
     assert(rep2.nDeleted == 0 && rep2.corpusBucketsRewritten == 0 &&
-      rep2.idxPartsRewritten == 0, s"$rep2")
+      rep2.idxBucketsRewritten == 0, s"$rep2")
     assert(spark.table(s"$db3.docs_corpus").count() == seedN - 2)
+
+    // deleting every doc of bucket 11 drops that partition from both tables
+    val bucket11 = spark.table(s"$db3.docs_corpus")
+      .filter(col("pbk") === 11).select("doc_id")
+    val n11 = bucket11.count()
+    val rep3 = AppendJob.deleteDocuments(spark, bucket11, db3)
+    assert(rep3.nDeleted == n11 && rep3.corpusBucketsRewritten == 0 &&
+      rep3.corpusBucketsDropped == 1 && rep3.idxBucketsRewritten == 0 &&
+      rep3.idxBucketsDropped == 1, s"$rep3")
+    Seq("docs_corpus", "docs_mhidx").foreach { t =>
+      val parts = spark.sql(s"SHOW PARTITIONS $db3.$t").collect().map(_.getString(0))
+      assert(!parts.contains("pbk=11"), s"$t still lists pbk=11: ${parts.mkString(",")}")
+      assert(spark.table(s"$db3.$t").filter(col("pbk") === 11).isEmpty)
+    }
     AppendJob.reset(spark, db3)
+  }
+
+  test("index partitions by the corpus doc bucket: <= 16 partitions, <= 16 files per append") {
+    val dbl = "graft_lake_layout"
+    AppendJob.reset(spark, dbl)
+    val docs = Tables.documents(spark, sfDir)
+    val day = pmod(col("doc_id"), lit(graft.operators.Dedup.BATCH_MOD))
+    AppendJob.seed(spark, docs.filter(!day.isin(3, 4, 5)), dbl)
+    val idxTbl = s"$dbl.docs_mhidx"
+    val idxDir = java.nio.file.Paths.get(warehouse, s"$dbl.db", "docs_mhidx")
+    def idxFiles() = {
+      val s = java.nio.file.Files.walk(idxDir)
+      try s.toArray.count(_.toString.endsWith(".parquet"))
+      finally s.close()
+    }
+    Seq(3, 4, 5).foreach { rem =>
+      val before = idxFiles()
+      val r = AppendJob.appendBatch(spark, docs.filter(day === rem), dbl)
+      assert(r.nAppended > 0, s"day $rem should append novel docs: $r")
+      assert(idxFiles() - before <= 16,
+        s"append of day $rem added ${idxFiles() - before} index files")
+    }
+    assert(partitionCols(idxTbl) == Seq("pbk"))
+    assert(spark.sql(s"SHOW PARTITIONS $idxTbl").count() <= 16)
+    assert(spark.table(idxTbl)
+      .filter(col("pbk") =!= pmod(col("doc_id"), lit(16))).isEmpty,
+      "every index row must sit in its doc's bucket")
+    AppendJob.reset(spark, dbl)
+  }
+
+  test("seed re-keys an old (band, nib) index on pbk once, row for row") {
+    val dbm = "graft_lake_migrate"
+    AppendJob.reset(spark, dbm)
+    val docs = Tables.documents(spark, sfDir)
+    AppendJob.seed(spark, docs, dbm)
+    val idxTbl = s"$dbm.docs_mhidx"
+    // the earlier layout's write, over the same rows
+    val old = spark.table(idxTbl).drop("pbk").localCheckpoint()
+    spark.sql(s"DROP TABLE $idxTbl")
+    old.write.partitionBy("band", "nib").saveAsTable(idxTbl)
+    assert(partitionCols(idxTbl) == Seq("band", "nib"))
+    def rows() = spark.table(idxTbl).select(old.columns.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+    val before = rows()
+
+    AppendJob.seed(spark, docs, dbm)
+    assert(partitionCols(idxTbl) == Seq("pbk"))
+    assert(rows() == before, "re-key must keep the index row for row")
+    AppendJob.reset(spark, dbm)
   }
 
   test("summary stays delta-consistent through append, upsert and delete") {
