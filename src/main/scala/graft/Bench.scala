@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -36,38 +35,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
     val sfDir0 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Coalesce post-shuffle partitions by SIZE (AQE advisory target)
-      // instead of stopping at defaultParallelism: the r14 fleet A/B
-      // measured 178.3 s → 166.0 s (263 queries, sf0.1) from collapsing
-      // KB-sized 32-task reduce stages into 1-2 tasks. Scale-adaptive by
-      // construction — at production volumes the advisory size (default
-      // 64 MB; production would raise it to 256 MB per the tuning guide)
-      // yields thousands of partitions and this flag only stops tiny
-      // stages from being sharded to the cluster's full width. Env
-      // override restores the stock posture for A/B re-measurement.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      // Let the planner pick shuffled-hash join when its size conditions
-      // hold (guide §3.1/§9): no sort on either shuffled side. A/B knob
-      // for clean re-measurement (r13 flagged the first attempt as
-      // host-load-ambiguous); default set from the measured fleet A/B —
-      // see OPTIMIZATION_r14.md.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      // A/B knobs for the r15 quiet-host re-measures (VERDICT r14 #5);
-      // both DEFAULT to stock values — no behavior change unless set.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(32))
     // dev-only multi-split mode (SPARK_GRAFT_MULTISPLIT=1): bench against
     // the re-sharded same-data twin of the fixture so the 8-vs-32-core
     // scaling leg measures plan parallelism instead of the single-row-

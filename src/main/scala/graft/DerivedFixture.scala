@@ -1,0 +1,67 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import graft.sources.SnapshotLake
+
+/** The one build-and-publish lifecycle shared by the fixtures derived
+  * from a read-only base fixture ([[ScaleFixture]], [[SkewFixture]],
+  * [[ShardFixture]]): each supplies only its table derivation.
+  *
+  * A derived fixture lives under an absolute root in a directory named
+  * by its fingerprint's hash, so a published fixture is never rewritten
+  * in place: a base-fixture regeneration or a derivation change yields a
+  * new fingerprint, hence a new directory. A build lands in a sibling
+  * temp dir and is published by one atomic rename, so a reader never
+  * sees a half-built fixture; when concurrent builders race, the loser
+  * finds the winner's marker and discards its copy. */
+object DerivedFixture {
+
+  /** Bump on ANY derivation change — keyed into every fingerprint, so a
+    * revision rebuilds the uniform corpus and its skewed twin together.
+    * v5: derived tables write through repartition([[OUT_PARTS]]) — the
+    * k-explode inherits the base fixture's 1-2 input partitions, so a
+    * ×40 corpus landed as ONE 29 MB parquet file and every scan of it
+    * ran as a single task (max/mean task ratio ~8 on BOTH SkewBench
+    * legs, and scan-bound scaled measurements serialized on one core,
+    * overstating scaled cost). */
+  val DERIVATION_VER = "v5"
+
+  /** Output parallelism for every derived-table write (matches the
+    * bench mains' local[32]). */
+  val OUT_PARTS = 32
+
+  /** Where fixtures are published, resolved to an absolute path once so
+    * a later working-directory change cannot split the cache. */
+  lazy val Root: Path = Paths.get("target").toAbsolutePath
+
+  /** Marker fingerprint: the base tables' file stats, the shared
+    * derivation version and the builder's own parameters (`extra`). */
+  def fingerprint(baseDir: String, tables: Seq[String],
+                  extra: String): String =
+    (baseDir +: tables.map(t => Memo.fingerprint(baseDir, t).toString) :+
+      DERIVATION_VER :+ extra).mkString("|")
+
+  /** The published `<root>/<name>_<hash>` directory for `fingerprint`,
+    * running `build` into a fresh temp dir first if it is missing. */
+  def publish(name: String, fingerprint: String, root: Path = Root)(
+      build: Path => Unit): Path = {
+    val dir = root.toAbsolutePath.resolve(f"${name}_${fingerprint.hashCode}%08x")
+    val marker = dir.resolve("_built")
+    def published = Files.exists(marker) && Files.readString(marker) == fingerprint
+    if (!published) {
+      Files.createDirectories(dir.getParent)
+      val tmp = Files.createTempDirectory(dir.getParent, s".${dir.getFileName}.")
+      try {
+        build(tmp)
+        Files.writeString(tmp.resolve("_built"), fingerprint)
+        Files.move(tmp, dir, StandardCopyOption.ATOMIC_MOVE)
+      } catch {
+        case e: Throwable =>
+          SnapshotLake.deleteRecursively(tmp)
+          if (!published) throw e
+      }
+    }
+    dir
+  }
+}

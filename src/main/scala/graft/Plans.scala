@@ -15,25 +15,15 @@ import org.apache.spark.sql.SparkSession
   *  - an outFile ending in "/" is treated as a DIRECTORY and each query's
   *    plan lands in its own <dir>/<name><SPARK_GRAFT_PLAN_SUFFIX>.txt —
   *    the `plans/r14/<query>_{before,after}.txt` deliverable format;
-  *  - SPARK_GRAFT_CPUS sizes the master/shuffle partitions (default 8)
-  *    so plans can be captured under the exact bench posture, and the
-  *    bench's AQE coalescing conf is applied here too (same session
-  *    shape ⇒ the captured plan is the one the bench actually runs).
+  *  - SPARK_GRAFT_CPUS sizes the master/shuffle partitions (default 8);
+  *    the session is [[GraftSession]], the bench's own, so the captured
+  *    plan is the one the bench runs.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("target/plans.txt")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus(8))
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")

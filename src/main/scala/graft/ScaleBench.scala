@@ -37,24 +37,12 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val topN = sys.env.getOrElse("SPARK_GRAFT_SCALE_TOPN", "30").toInt
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val scaleDir = s"target/scale${scale}fleet"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // io codec A/B knob (VERDICT r14 #5): zstd-vs-lz4 matters only at
-      // the scale legs where shuffles carry real bytes; default stock.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(32))
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    ScaleFixture.ensure(spark, baseDir, scaleDir, scale)
+    val scaleDir = ScaleFixture.ensure(spark, baseDir, scale)
     val agg = StageMetrics.install(spark)
 
     /** Wall time only — the full-fleet ranking pass, where the listener

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,25 +24,12 @@ import org.apache.spark.sql.functions._
   * from the base so every registered query still resolves its inputs.
   *
   * The shard-derivation primitives ([[derivedDocs]], [[derivedEvents]],
-  * [[linkDims]], [[DERIVATION_VER]]) are shared with [[SkewFixture]],
-  * whose corpus must differ from this one ONLY in key distribution —
-  * a private copy of the derivation would silently diverge on the next
-  * revision and invalidate every skew-vs-uniform ratio. */
+  * [[linkDims]]) are shared with [[SkewFixture]], whose corpus must
+  * differ from this one ONLY in key distribution — a private copy of the
+  * derivation would silently diverge on the next revision and invalidate
+  * every skew-vs-uniform ratio. Publishing is [[DerivedFixture]]'s. */
 object ScaleFixture {
-
-  /** Bump on ANY derivation change — keyed into BOTH fixtures' markers
-    * so a revision rebuilds the uniform corpus and its skewed twin
-    * together. v5: derived tables write through repartition(32) — the
-    * k-explode inherits the base fixture's 1-2 input partitions, so a
-    * ×40 corpus landed as ONE 29 MB parquet file and every scan of it
-    * ran as a single task (max/mean task ratio ~8 on BOTH SkewBench
-    * legs, and scan-bound scaled measurements serialized on one core,
-    * overstating scaled cost). */
-  val DERIVATION_VER = "v5"
-
-  /** Output parallelism for every derived-table write (matches the
-    * bench mains' local[32]). */
-  private[graft] val OUT_PARTS = 32
+  import DerivedFixture.OUT_PARTS
 
   val dimTables: Seq[String] =
     Seq("region", "nation", "customer", "supplier", "part", "orders",
@@ -82,62 +69,38 @@ object ScaleFixture {
         (col("user_id") * scale + col("k")).as("user_id"),
         col("event_type"), col("value"), col("props"))
 
-  /** Symlink the seven TPC-H-ish dims from the base. Always re-points:
-    * a rebuild against a DIFFERENT base must not keep links to the old
-    * one (mixed-scale corpus), and deleteIfExists removes dangling
-    * links Files.exists would miss. */
-  private[graft] def linkDims(baseDir: String, dir: String): Unit =
+  /** Symlink the seven TPC-H-ish dims from the base into a fresh build
+    * dir. */
+  private[graft] def linkDims(baseDir: String, dir: Path): Unit =
     dimTables.foreach { t =>
-      val link = Paths.get(dir, s"$t.parquet")
-      Files.deleteIfExists(link)
-      Files.createSymbolicLink(link,
+      Files.createSymbolicLink(dir.resolve(s"$t.parquet"),
         Paths.get(baseDir, s"$t.parquet").toAbsolutePath)
     }
 
-  /** Marker fingerprint over the base tables a derived fixture reads,
-    * plus the shared derivation version and any builder-specific
-    * suffix. */
-  private[graft] def fingerprint(baseDir: String, tables: Seq[String],
-                                 scale: Int, extra: String = ""): String = {
-    val parts = tables.map { t =>
-      val f = new java.io.File(s"$baseDir/$t.parquet")
-      val files = if (f.isDirectory) f.listFiles() else Array(f)
-      files.map(x => s"${x.getName}:${x.length}:${x.lastModified}")
-        .sorted.mkString("|")
-    }
-    baseDir + "||" + parts.mkString("||") +
-      s"|x$scale|$DERIVATION_VER$extra"
-  }
-
-  /** Build (or reuse) the derived corpus at `dir`. A marker file keyed
-    * on the base fixture's file stats plus a builder version makes an
-    * in-place fixture regeneration — or a derivation change — a rebuild
-    * instead of a stale read. */
-  def ensure(spark: SparkSession, baseDir: String, dir: String,
-             scale: Int): Unit = {
-    val marker = Paths.get(dir, "_built")
-    val fp = fingerprint(baseDir,
-      Seq("documents", "embeddings", "events"), scale)
-    if (Files.exists(marker) && Files.readString(marker) == fp) return
-    derivedDocs(spark, baseDir, scale)
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(OUT_PARTS)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    Tables.embeddings(spark, baseDir)
-      .select(col("vec_id"), col("embedding"), col("label"), shardK(scale))
-      .select(
-        (col("vec_id") * scale + col("k")).as("vec_id"),
-        expr("transform(embedding, (v, j) -> CAST(v * (1.0D + " +
-          "((k * 31 + j) % 7 - 3) / 1000.0D) AS FLOAT))").as("embedding"),
-        col("label"))
-      .repartition(OUT_PARTS)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    derivedEvents(spark, baseDir, scale)
-      .repartition(OUT_PARTS)
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    linkDims(baseDir, dir)
-    Files.createDirectories(marker.getParent)
-    Files.writeString(marker, fp)
-    ()
+  /** Build (or reuse) the derived ×`scale` corpus of `baseDir` under
+    * `root`; returns its published path. */
+  def ensure(spark: SparkSession, baseDir: String, scale: Int,
+             root: Path = DerivedFixture.Root): String = {
+    val fp = DerivedFixture.fingerprint(baseDir,
+      Seq("documents", "embeddings", "events"), s"x$scale")
+    DerivedFixture.publish(s"scale$scale", fp, root) { dir =>
+      derivedDocs(spark, baseDir, scale)
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .repartition(OUT_PARTS)
+        .write.parquet(s"$dir/documents.parquet")
+      Tables.embeddings(spark, baseDir)
+        .select(col("vec_id"), col("embedding"), col("label"), shardK(scale))
+        .select(
+          (col("vec_id") * scale + col("k")).as("vec_id"),
+          expr("transform(embedding, (v, j) -> CAST(v * (1.0D + " +
+            "((k * 31 + j) % 7 - 3) / 1000.0D) AS FLOAT))").as("embedding"),
+          col("label"))
+        .repartition(OUT_PARTS)
+        .write.parquet(s"$dir/embeddings.parquet")
+      derivedEvents(spark, baseDir, scale)
+        .repartition(OUT_PARTS)
+        .write.parquet(s"$dir/events.parquet")
+      linkDims(baseDir, dir)
+    }.toString
   }
 }

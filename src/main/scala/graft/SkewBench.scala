@@ -53,21 +53,12 @@ object SkewBench {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val uniformDir = s"target/scale${scale}fleet"
-    val skewDir = s"target/skew${scale}fleet"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cpus(32))
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    ScaleFixture.ensure(spark, baseDir, uniformDir, scale)
-    SkewFixture.ensure(spark, baseDir, uniformDir, skewDir, scale)
+    val uniformDir = ScaleFixture.ensure(spark, baseDir, scale)
+    val skewDir = SkewFixture.ensure(spark, baseDir, scale)
     val agg = StageMetrics.install(spark)
 
     /** Min-of-2 wall time + metrics/imbalance of the faster run. Fatal

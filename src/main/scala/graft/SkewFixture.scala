@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -31,10 +31,10 @@ import org.apache.spark.sql.functions._
   *
   * The shard derivation itself is [[ScaleFixture.derivedDocs]] /
   * [[ScaleFixture.derivedEvents]] — the hot keys are three withColumn
-  * edits ON TOP of the shared build, and both fixtures' markers carry
-  * [[ScaleFixture.DERIVATION_VER]], so the "differs ONLY in key
+  * edits ON TOP of the shared build, and both fixtures' fingerprints
+  * carry [[DerivedFixture.DERIVATION_VER]], so the "differs ONLY in key
   * distribution" premise survives derivation revisions by
-  * construction. Embeddings are symlinked from `uniformDir` (the
+  * construction. Embeddings are symlinked from the uniform fixture (the
   * measured query set reads documents and events); TPC-H dims are
   * symlinked from the base. */
 object SkewFixture {
@@ -49,16 +49,15 @@ object SkewFixture {
   val BOILER_MOD     = 5   // 1-in-5 docs  -> boilerplate appended
   val HOT_USER_MOD   = 5   // 1-in-5 events -> user 0
 
-  /** Build (or reuse) the skewed corpus at `dir`. `uniformDir` must
-    * already hold the uniform ×`scale` fixture (for the embeddings
-    * symlink). Marker-guarded like [[ScaleFixture.ensure]]. */
-  def ensure(spark: SparkSession, baseDir: String, uniformDir: String,
-             dir: String, scale: Int): Unit = {
-    val marker = Paths.get(dir, "_built")
-    val fp = ScaleFixture.fingerprint(baseDir,
-      Seq("documents", "events"), scale,
-      extra = s"|skew-$HOT_SOURCE_MOD-$BOILER_MOD-$HOT_USER_MOD")
-    if (!(Files.exists(marker) && Files.readString(marker) == fp)) {
+  /** Build (or reuse) the skewed ×`scale` corpus of `baseDir` under
+    * `root`; returns its published path. Its embeddings link to the
+    * published uniform ×`scale` fixture, which is ensured first. */
+  def ensure(spark: SparkSession, baseDir: String, scale: Int,
+             root: Path = DerivedFixture.Root): String = {
+    val uniformDir = ScaleFixture.ensure(spark, baseDir, scale, root)
+    val fp = DerivedFixture.fingerprint(baseDir, Seq("documents", "events"),
+      s"x$scale|skew-$HOT_SOURCE_MOD-$BOILER_MOD-$HOT_USER_MOD|$uniformDir")
+    DerivedFixture.publish(s"skew$scale", fp, root) { dir =>
       ScaleFixture.derivedDocs(spark, baseDir, scale)
         .withColumn("source",
           when(pmod(hash(col("doc_id")), lit(HOT_SOURCE_MOD)) === 0,
@@ -68,22 +67,17 @@ object SkewFixture {
             concat(col("text"), lit(" " + BOILERPLATE)))
             .otherwise(col("text")))
         .withColumn("n_chars", length(col("text")).cast("long"))
-        .repartition(ScaleFixture.OUT_PARTS)
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+        .repartition(DerivedFixture.OUT_PARTS)
+        .write.parquet(s"$dir/documents.parquet")
       ScaleFixture.derivedEvents(spark, baseDir, scale)
         .withColumn("user_id",
           when(pmod(hash(col("event_id")), lit(HOT_USER_MOD)) === 0, lit(0L))
             .otherwise(col("user_id")))
-        .repartition(ScaleFixture.OUT_PARTS)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+        .repartition(DerivedFixture.OUT_PARTS)
+        .write.parquet(s"$dir/events.parquet")
       ScaleFixture.linkDims(baseDir, dir)
-      val emb = Paths.get(dir, "embeddings.parquet")
-      Files.deleteIfExists(emb)
-      Files.createSymbolicLink(emb,
-        Paths.get(uniformDir, "embeddings.parquet").toAbsolutePath)
-      Files.createDirectories(marker.getParent)
-      Files.writeString(marker, fp)
-      ()
-    }
+      Files.createSymbolicLink(dir.resolve("embeddings.parquet"),
+        Paths.get(uniformDir, "embeddings.parquet"))
+    }.toString
   }
 }

@@ -126,11 +126,10 @@ object IngestJob {
     val csvDir = args.headOption.getOrElse(
       sys.error("usage: IngestJob <csvDir> [db]"))
     val db = args.lift(1).getOrElse("bootcamp")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .appName("graft-ingest").getOrCreate()
+    // one core count sizes both the local master and the shuffle width;
+    // $SPARK_GRAFT_MASTER points the job at a cluster instead
+    val spark = graft.GraftSession(graft.GraftSession.cpus(32), "graft-ingest",
+      sys.env.get("SPARK_GRAFT_MASTER"))
     try {
       val reports = run(spark, harnessManifest(csvDir), db)
       reports.foreach(r => println(s"INGEST OK ${r.alias}"))

@@ -17,16 +17,6 @@ import org.apache.spark.sql.functions._
   */
 class AqeSkewJoinSpec extends SparkTestBase {
 
-  private def withConf(conf: Map[String, String])(body: => Unit): Unit = {
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   private val skewConf = Map(
     "spark.sql.adaptive.enabled" -> "true",
     "spark.sql.adaptive.skewJoin.enabled" -> "true",
@@ -63,7 +53,7 @@ class AqeSkewJoinSpec extends SparkTestBase {
 
   test("OptimizeSkewedJoin splits the hot key's partition under the " +
     "session's AQE defaults") {
-    withConf(skewConf) {
+    withConf(skewConf.toSeq: _*) {
       val df = skewedJoin()
       val rows = df.collect()
       assert(rows.length == 1 && rows(0).getLong(0) == 150000L)
@@ -76,7 +66,7 @@ class AqeSkewJoinSpec extends SparkTestBase {
 
   test("control: the same join with skewJoin disabled shows no split " +
     "(the assertion is not vacuous)") {
-    withConf(skewConf + ("spark.sql.adaptive.skewJoin.enabled" -> "false")) {
+    withConf((skewConf + ("spark.sql.adaptive.skewJoin.enabled" -> "false")).toSeq: _*) {
       val df = skewedJoin()
       df.collect()
       val plan = df.queryExecution.executedPlan.toString

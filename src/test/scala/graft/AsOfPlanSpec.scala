@@ -144,16 +144,16 @@ class AsOfPlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
       .toSet
     val widths = Seq("3", "7", "64")
-    val old = spark.conf.get("spark.sql.shuffle.partitions")
-    try widths.foreach { w =>
-      spark.conf.set("spark.sql.shuffle.partitions", w)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      val got = AsOf.join(buys, views, "user_id", "b_us", "v_us")
-        .select(col("event_id"), col("__r_v_us")).collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-        .toSet
-      assert(got == expected, s"as-of result drifted at width $w")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", old)
+    widths.foreach { w =>
+      withConf("spark.sql.shuffle.partitions" -> w,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "true") {
+        val got = AsOf.join(buys, views, "user_id", "b_us", "v_us")
+          .select(col("event_id"), col("__r_v_us")).collect()
+          .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
+          .toSet
+        assert(got == expected, s"as-of result drifted at width $w")
+      }
+    }
   }
 
   test("self-join lineage: both sides from one table resolve distinct attributes") {

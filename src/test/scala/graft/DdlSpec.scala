@@ -15,9 +15,7 @@ class DdlSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("bucketed fact-fact join runs with zero shuffle exchanges") {
     warehouse
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = Ddl.bucketJoin(spark)
       df.collect()
       val joins = collect(df.queryExecution.executedPlan) {
@@ -32,7 +30,7 @@ class DdlSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         assert(shufflesBelow.isEmpty,
           s"bucket join must not shuffle its inputs:\n${df.queryExecution.executedPlan}")
       }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("bucket join result matches the raw-parquet join") {
@@ -80,12 +78,9 @@ class DdlSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       "FOR COLUMNS n_nationkey, n_regionkey")
     // plan-level row counts / NDVs surface only under the cost-based
     // optimizer; without it the visitor propagates sizeInBytes alone
-    val saved = spark.conf.getOption("spark.sql.cbo.enabled")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    val stats =
-      try spark.table("bootcamp.nation_part").queryExecution.optimizedPlan.stats
-      finally saved.fold(spark.conf.unset("spark.sql.cbo.enabled"))(
-        spark.conf.set("spark.sql.cbo.enabled", _))
+    val stats = withConf("spark.sql.cbo.enabled" -> "true") {
+      spark.table("bootcamp.nation_part").queryExecution.optimizedPlan.stats
+    }
     assert(stats.rowCount.contains(BigInt(25)),
       s"table-level row count missing after ANALYZE: ${stats.rowCount}")
     val ndv = stats.attributeStats.collectFirst {

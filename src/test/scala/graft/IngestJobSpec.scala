@@ -37,9 +37,7 @@ class IngestJobSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     }
     // the load-bearing property: the facts landed bucketed on the join
     // key, so fact⋈fact joins need no exchange
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = spark.table(s"$db.lineitem_w")
       val o = spark.table(s"$db.orders_w")
       val joined = li.join(o, li("l_orderkey") === o("o_orderkey"))
@@ -63,7 +61,7 @@ class IngestJobSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
           s"composed-job bucket join must not shuffle its inputs " +
             s"(${shuffles.size} exchanges in full plan)")
       }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("declared DDL schema skips inference and fixes column types") {

@@ -13,9 +13,7 @@ trait InvarianceHarness { self: SparkTestBase =>
     * collected-row snapshot per query; errors become marker rows. */
   protected def runQuerySet(conf: Map[String, String], names: Seq[String],
                             dir: String): Map[String, Seq[String]] = {
-    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    withConf(conf.toSeq: _*) {
       names.map { name =>
         val rows =
           try SparkEntry.queries(name)(spark, dir).collect().toSeq.map(_.toString)
@@ -23,9 +21,6 @@ trait InvarianceHarness { self: SparkTestBase =>
         spark.catalog.clearCache()
         name -> rows
       }.toMap
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -159,18 +159,18 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         case _ => Nil
       }).headOption
     }
-    val orig = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "30")
+    withConf("spark.sql.shuffle.partitions" -> "30") {
       assert(saltLiteral().contains(10L),
         "salt modulus at 30 shuffle partitions must be 30/3 = 10")
-      spark.conf.set("spark.sql.shuffle.partitions", "300")
+    }
+    withConf("spark.sql.shuffle.partitions" -> "300") {
       assert(saltLiteral().contains(100L),
         "salt modulus at 300 shuffle partitions must be 300/3 = 100")
-      spark.conf.set("spark.sql.shuffle.partitions", "6")
+    }
+    withConf("spark.sql.shuffle.partitions" -> "6") {
       assert(saltLiteral().contains(8L),
         "salt modulus floors at 8 for tiny local runs")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", orig)
+    }
   }
 
   test("batched top-k: queries broadcast, corpus embeddings never shuffle") {
@@ -300,9 +300,7 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // feed the join in place: its wide signature rows (K columns × BANDS
     // rows per doc) never cross an exchange; only the probe side shuffles
     // into the bucket layout.
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = executed(Dedup.dedupIncremental(spark, sfDir))
       // (a) the index scan itself is the bucketed read — the join's index
       // side needs no exchange of its own
@@ -325,7 +323,7 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       }
       assert(sigExchanges.isEmpty,
         s"signature columns crossed a shuffle exchange:\n${sigExchanges.mkString("\n")}")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("fuzzy match joins are key-blocked, never a cross product") {
@@ -400,16 +398,13 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     // still ships q_salted_agg for the planned-ahead variant).
     import spark.implicits._
     import org.apache.spark.sql.functions.when
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // 50k rows of key 0 vs a uniform spread; dim side small but not
       // broadcast (disabled above) so the join stays sort-merge
       val fact = spark.range(0, 60000)
@@ -426,9 +421,6 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         s"AQE did not mark the SMJ as skew-handled:\n$plan")
       assert(plan.contains("AQEShuffleRead coalesced and skewed"),
         s"AQE did not split the skewed reader side:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

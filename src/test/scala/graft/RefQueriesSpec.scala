@@ -78,9 +78,7 @@ class RefQueriesSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   test("dim joins use broadcast hash join even with auto-broadcast disabled") {
     // README.md:16-17 semantics: explicit broadcast must survive
     // autoBroadcastJoinThreshold=-1.
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val df = RefQueries.broadcastDims(spark, sfDir)
       df.collect()
       val plan = df.queryExecution.executedPlan
@@ -95,7 +93,7 @@ class RefQueriesSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         }
         assert(below.isEmpty, s"shuffle below broadcast join:\n$plan")
       }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("pricing summary pushes the shipdate filter into the parquet scan") {

@@ -13,17 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class RuntimeFilterSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val conf = spark.conf
-    val saved = pairs.map { case (k, _) => k -> conf.getOption(k) }
-    pairs.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
-  }
-
   test("selective dim filter injects a bloom filter on the fact scan side") {
     withConf(
       // force the shuffle-join regime (runtime filters target non-broadcast

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Similarity}
@@ -29,19 +27,16 @@ class ScalingCurveSpec extends SparkTestBase {
 
   private val SCALE = 10
   private val baseDir = "/root/testdata/sf0.1"
-  private val scaleDir = "target/scale10"
 
-  /** Build the derived corpus once per checkout via the shared
+  /** The derived corpus, published once per checkout by the shared
     * [[graft.ScaleFixture]] builder (also used by [[graft.ScaleBench]]'s
-    * fleet-wide pass) — its marker file keys on the base fixture's file
+    * fleet-wide pass) — its fingerprint keys on the base fixture's file
     * stats, so an in-place fixture regeneration is a rebuild instead of
     * a stale read. */
-  private def ensureScaleCorpus(): Unit =
-    ScaleFixture.ensure(spark, baseDir, scaleDir, SCALE)
+  private lazy val scaleDir = ScaleFixture.ensure(spark, baseDir, SCALE)
 
   test("minhash-LSH candidate pairs grow near-linearly across a 10x " +
     "scale step (banding is O(n), not all-pairs)") {
-    ensureScaleCorpus()
     def cand(dir: String): Long =
       Dedup.minhashCandidates(
         Dedup.docsWithShingles(spark, dir).select("doc_id", "sh")).count()
@@ -57,7 +52,6 @@ class ScalingCurveSpec extends SparkTestBase {
 
   test("ngram inverted-index posting work and candidates grow " +
     "near-linearly across a 10x scale step") {
-    ensureScaleCorpus()
     // capped posting JOIN WORK Σ pn·(pn−1)/2 — the exact number of pair
     // rows the index self-join materializes before aggregation
     def work(dir: String): (Long, Long) = {
@@ -85,7 +79,6 @@ class ScalingCurveSpec extends SparkTestBase {
 
   test("trained-IVF probe cost: scanned FRACTION stays flat across a " +
     "10x scale step (probe rows grow linearly, never quadratically)") {
-    ensureScaleCorpus()
     val NPROBE = 4 // mirrors Similarity's probe width
     def probeStats(dir: String): (Double, Long, Long) = {
       val e = Similarity.corpus(spark, dir)
@@ -169,7 +162,6 @@ class ScalingCurveSpec extends SparkTestBase {
 
   test("dup-passage seed-pair volume grows near-linearly across a 10x " +
     "scale step (capped postings keep span extraction O(n))") {
-    ensureScaleCorpus()
     // The word-suffix bijection preserves each shard's 8-gram structure
     // while keeping shards disjoint, so matching-seed pairs — the only
     // thing q_dup_passages ever materializes per document pair — must
@@ -199,7 +191,6 @@ class ScalingCurveSpec extends SparkTestBase {
 
   test("dedup-cluster formation across a 10x step: edge volume grows " +
     "near-linearly and pointer-jumping rounds stay flat") {
-    ensureScaleCorpus()
     // The scale-10 corpus is 10 shingle-disjoint shards with the base
     // corpus's pairwise-Jaccard structure, so the >=0.5-Jaccard edge set
     // grows ~10x (per shard a copy of the base edge set) while component
@@ -229,7 +220,6 @@ class ScalingCurveSpec extends SparkTestBase {
 
   test("quantile-norm alignment work is DOMAIN-bounded: union rows grow " +
     "~1x across the 10x corpus step (the r12 BNLJ-kill scale claim)") {
-    ensureScaleCorpus()
     // the rewritten lookup's unit of work: probe rows (distinct
     // (source, n_chars)) + anchor rows (distinct n_chars) through ONE
     // sorted window — the corpus-sized frame never enters the alignment

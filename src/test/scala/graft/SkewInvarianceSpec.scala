@@ -19,14 +19,11 @@ package graft
   */
 class SkewInvarianceSpec extends SparkTestBase with InvarianceHarness {
 
-  private val dir = "target/skewtest"
-
   test("skew-sensitive queries return identical rows on a cap-exceeding " +
     "skewed corpus under a different shuffle fan-out and scan split size") {
-    // embeddings symlink target = base dir (the skew set reads documents
-    // and events only); ×4 on sf0.001 ≈ 2.4k docs, ~480 sharing the
-    // boilerplate shingles — every 64-cap structure overflows
-    SkewFixture.ensure(spark, sfDir, sfDir, dir, scale = 4)
+    // ×4 on sf0.001 ≈ 2.4k docs, ~480 sharing the boilerplate
+    // shingles — every 64-cap structure overflows
+    val dir = SkewFixture.ensure(spark, sfDir, scale = 4)
     val names = SkewBench.skewQueries.filter(SparkEntry.queries.contains)
     val a = runQuerySet(Map("spark.sql.shuffle.partitions" -> "8"), names, dir)
     val b = runQuerySet(Map(

@@ -137,11 +137,8 @@ abstract class StreamOpsSuiteBase extends SparkTestBase
     // transformWithState (Spark 4's arbitrary-stateful successor) is
     // RocksDB-only — set the provider for the query, restore after
     implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(providerKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val mem = MemoryStream[UserEvent]
       val q = StreamOps.runningUserTotalsTws(mem.toDS())
         .writeStream.format("memory").queryName("tws_totals_sink")
@@ -160,9 +157,6 @@ abstract class StreamOpsSuiteBase extends SparkTestBase
         math.abs(finals(1L).total_value - 7.0) < 1e-9)
       assert(finals(2L).n_events == 2 &&
         math.abs(finals(2L).total_value - 2.0) < 1e-9)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -251,11 +245,8 @@ abstract class StreamOpsSuiteBase extends SparkTestBase
     // the provider really loaded (rocksdb* custom metrics in progress —
     // a typo'd providerClass would silently run the default).
     implicit val ctx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(providerKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val mem = MemoryStream[UserEvent]
       val q = StreamOps.sessionFlush(mem.toDS(), gapSeconds = 1800L)
         .writeStream.format("memory").queryName("rocksdb_flush_sink")
@@ -276,9 +267,6 @@ abstract class StreamOpsSuiteBase extends SparkTestBase
       val rows = spark.table("rocksdb_flush_sink").collect()
       assert(rows.length == 1) // in-batch gap closes the first session
       assert(rows(0).getLong(3) == 2L) // holding the two 00:0x events
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
