@@ -3,6 +3,11 @@ package graft
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
+  * The fixture is read at the session's width: when its `lineitem` scan
+  * plans fewer partitions than the session has cores (the one-row-group
+  * sf fixtures), Bench reads the fixture's same-data sharded twin instead
+  * ([[ShardFixture.widened]]), so no operator has to widen its own input.
+  *
   * Each query is forced through the `noop` sink rather than `count()`:
   * count() lets Catalyst prune the aggregate/projection columns, which
   * under-measures the work a real consumer pays; noop evaluates every
@@ -34,17 +39,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
-    val sfDir0 = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(GraftSession.cpus(32))
-    // dev-only multi-split mode (SPARK_GRAFT_MULTISPLIT=1): bench against
-    // the re-sharded same-data twin of the fixture so the 8-vs-32-core
-    // scaling leg measures plan parallelism instead of the single-row-
-    // group stage-latency floor (VERDICT r14 #5). The driver sets no env
-    // and always benches the base fixture.
-    val sfDir =
-      if (sys.env.get("SPARK_GRAFT_MULTISPLIT").contains("1"))
-        ShardFixture.ensure(spark, sfDir0)
-      else sfDir0
+    val sfDir = ShardFixture.widened(spark,
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     // Warm the JVM/codegen/parquet-reader paths once so first-query timings
     // measure the query, not classloading (a real cluster amortizes this
     // over hours; a 30-query bench run must not bill it to one query).
@@ -73,29 +70,8 @@ object Bench {
     // the driver sets no env and always benches the full registry
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    // dev-only changed-only mode (SPARK_GRAFT_BENCH_CHANGED_ONLY=1): skip
-    // queries whose implementing source file — and the shared core — are
-    // byte-identical to the previous run's manifest, carrying their prior
-    // mins into the output (flagged in "carried"). The driver sets no env
-    // and always runs the full fleet; this bounds DEV iteration wall time
-    // as the registry grows (253 × ~0.8 s × passes is minutes per spin).
-    val changedOnly =
-      sys.env.get("SPARK_GRAFT_BENCH_CHANGED_ONLY").contains("1")
-    val manifest = BenchManifest.load()
-    // carried must respect the same subset filter as the live runs: with
-    // both env vars set, a carried query outside ONLY would otherwise
-    // sneak into the output JSON and the headline total (ADVICE r11)
-    val carried: Map[String, Double] =
-      (if (!changedOnly || manifest.isEmpty) Map.empty[String, Double]
-       else BenchManifest.carriable(manifest.get))
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-    val allNames = SparkEntry.queries.toSeq.sortBy(_._1)
+    val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val names = allNames.filterNot { case (name, _) => carried.contains(name) }
-    if (carried.nonEmpty)
-      System.err.println(
-        s"[bench] changed-only: carrying ${carried.size} unchanged-file " +
-          s"queries from manifest, running ${names.size}")
     // first-touch tracking: a query whose run performed a shared
     // memo/index/lab build ([[BuildMeter]]) gets flagged, so
     // round-over-round diffs can separate build cost from plan cost
@@ -141,10 +117,7 @@ object Bench {
       if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    val ran = summarize(_.min)
-    // carried queries ride along at their manifest min so the headline
-    // total stays full-fleet-comparable; they are flagged, never silent
-    val results = (ran ++ carried.toSeq).sortBy(_._1)
+    val results = summarize(_.min)
     // Medians ride along for round-over-round attribution: mins answer
     // "how fast is the plan", medians answer "did the code actually
     // change" — host-contention jitter moves mins between rounds on
@@ -158,12 +131,11 @@ object Bench {
     val ft = names.map { case (name, _) =>
       s"\"" + name + "\":" + touched.contains(name)
     }.mkString("{", ",", "}")
-    val carriedJson = carried.keys.toSeq.sorted
-      .map(k => s"\"" + k + "\"").mkString("[", ",", "]")
     // total counts SUCCESSFUL queries only — a failure (negative marker)
     // must never make the headline number smaller
     val total = results.map(_._2).filter(_ > 0).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"medians":$ms,"first_touch":$ft,"carried":$carriedJson,"sf":"$sfDir"}""")
+    // "carried"/"n_carried" are always [] / 0, kept for the format's parsers
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"medians":$ms,"first_touch":$ft,"carried":[],"sf":"$sfDir"}""")
     def summaryJson(metric: String, kvs: Seq[(String, Double)],
                     extra: String): String = {
       val good = kvs.map(_._2).filter(_ > 0)
@@ -203,7 +175,7 @@ object Bench {
         s""","shuffle_read_mb":${mb(bytes.shuffleRead)}""" +
         s""","spill_mb":${mb(bytes.spill)},"input_mb":${mb(bytes.input)}"""
     val summary = summaryJson("bench_summary", results,
-      s""","n_carried":${carried.size}$host$byteJson""")
+      s""","n_carried":0$host$byteJson""")
     // Belt and braces for the driver's parser: (a) the summary also lands
     // in a bare file no log framework can decorate; (b) stop Spark BEFORE
     // the final println so no shutdown chatter can print after it; the
@@ -223,7 +195,6 @@ object Bench {
       }
     writeQuiet("target/bench_cold.json", coldSummary)
     writeQuiet("target/bench_summary.json", summary)
-    BenchManifest.save(results, carried.keySet)
     spark.stop()
     println(coldSummary)
     println(summary)

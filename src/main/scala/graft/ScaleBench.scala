@@ -36,10 +36,13 @@ object ScaleBench {
   private val SHUFFLE_FLOOR_BYTES = 1L << 20 // ignore sub-MB base shuffles
 
   def main(args: Array[String]): Unit = {
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val topN = sys.env.getOrElse("SPARK_GRAFT_SCALE_TOPN", "30").toInt
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val spark = GraftSession(GraftSession.cpus(32))
+    // read at the session's width like Bench; the scaled corpus derives
+    // from (and links its dims to) this dir, so both legs scan as wide
+    val baseDir = ShardFixture.widened(spark,
+      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val scaleDir = ScaleFixture.ensure(spark, baseDir, scale)

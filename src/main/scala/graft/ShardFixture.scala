@@ -11,20 +11,23 @@ import org.apache.spark.sql.SparkSession
   * move).
   *
   * Why it exists (VERDICT r14 #5): every base sf fixture is ONE parquet
-  * row group, so every scan stage plans 1-3 tasks and the 8-vs-32-core
-  * scaling leg measured nothing but per-stage fixed latency — ratios ≈ 1
-  * fleet-wide, indistinguishable from "nothing parallelizes". On a
-  * ≥32-file fixture the scan width is real, the Par.* guards never fire
-  * (planned partitions ≥ cores — the production posture), and the
-  * core-count ratio measures the plans. Opt-in via
-  * `SPARK_GRAFT_MULTISPLIT=1` on [[Bench]]; the driver never sets it,
-  * so the contract bench is untouched.
+  * row group, so every scan stage plans 1-3 tasks and every operator
+  * above it inherits that width — on a 32-core session one task does all
+  * the row-local work, and the 8-vs-32-core scaling leg measures nothing
+  * but per-stage fixed latency. A production table gets its parallelism
+  * from its layout (many files, 128 MB splits); this twin gives the dev
+  * fixtures the same posture, so operators never widen their own inputs.
+  *
+  * [[widened]] is the one place that decides which of the two a bench
+  * main reads: the base fixture when its `lineitem` scan already plans at
+  * least as many partitions as the session has cores, else the twin.
+  * [[Bench]] and [[ScaleBench]] read through it; Verify and the DuckDB
+  * oracle keep reading the base fixtures.
   *
   * events is written through [[Tables.events]], i.e. with the normalized
   * µs TimestampType column — every consumer reads it through the same
   * loader, which passes an already-TimestampType column through
-  * unchanged. The scaling leg is bench-only; the DuckDB oracle keeps
-  * running against the base fixtures.
+  * unchanged.
   */
 object ShardFixture {
   /** Bump on any derivation change (forces a rebuild). */
@@ -45,4 +48,15 @@ object ShardFixture {
       }
     }.toString
   }
+
+  /** `baseDir` when its `lineitem` scan plans at least the session's
+    * default parallelism in partitions, else the published twin of it
+    * (built on first use). A twin plans [[DerivedFixture.OUT_PARTS]]
+    * partitions, so up to that many cores widening it again returns it
+    * as is. */
+  def widened(spark: SparkSession, baseDir: String,
+              root: Path = DerivedFixture.Root): String =
+    if (Tables.lineitem(spark, baseDir).rdd.getNumPartitions >=
+        spark.sparkContext.defaultParallelism) baseDir
+    else ensure(spark, baseDir, root)
 }

@@ -11,30 +11,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RefQueries.flagship(spark, "/root/testdata/sf0.001")
 
-  /** Every registered query, one per implemented operator (SURVEY.md §2),
-    * grouped by the source file that implements it. The grouping is what
-    * lets [[Bench]]'s dev-only changed-only mode attribute each query to
-    * the file whose hash decides whether its steady-state timing can be
-    * carried from the previous run's manifest. */
-  private[graft] lazy val registryGroups: Seq[(String, Seq[Q])] = Seq(
-    "operators/RefQueries.scala" -> RefQueries.all,
-    "operators/Breadth.scala" -> Breadth.all,
-    "operators/JoinsPlus.scala" -> JoinsPlus.all,
-    "operators/TextAnalysis.scala" -> TextAnalysis.all,
-    "operators/Dedup.scala" -> Dedup.all,
-    "operators/Similarity.scala" -> Similarity.all,
-    "operators/Multimodal.scala" -> Multimodal.all,
-    "operators/TrainPipeline.scala" -> TrainPipeline.all,
-    "operators/Curation.scala" -> Curation.all,
-    "operators/Layout.scala" -> Layout.all,
-    "operators/Profiling.scala" -> Profiling.all,
-    "operators/Bpe.scala" -> Bpe.all,
-    "operators/Graph.scala" -> Graph.all,
-    "operators/Inference.scala" -> Inference.all,
-    "sources/Ddl.scala" -> sources.Ddl.all,
-    "sources/SnapshotLake.scala" -> sources.SnapshotLake.all)
-
-  private lazy val registry: Seq[Q] = registryGroups.flatMap(_._2)
+  /** Every registered query, one per implemented operator (SURVEY.md §2). */
+  private lazy val registry: Seq[Q] = Seq(
+    RefQueries.all, Breadth.all, JoinsPlus.all, TextAnalysis.all, Dedup.all,
+    Similarity.all, Multimodal.all, TrainPipeline.all, Curation.all,
+    Layout.all, Profiling.all, Bpe.all, Graph.all, Inference.all,
+    sources.Ddl.all, sources.SnapshotLake.all).flatten
 
   /** Raw registration order, pre-Map — RegistryContractSpec asserts name
     * uniqueness here (a duplicate would otherwise be silently dropped by

@@ -26,9 +26,6 @@ object Breadth {
     val o  = Tables.orders(s, dir)
     val c  = Tables.customer(s, dir)
     val n  = Tables.nation(s, dir)
-    // fanKey (r14): the li⋈o shuffle join and the per-customer partial
-    // aggregate pipeline in one stage; AQE size-coalescing folded the
-    // ~20 MB scan-rooted exchange to one task. Width pin, scale-guarded.
     // r15: aggregate to one row per customer BEFORE the customer/nation
     // dimension joins (§2.3 aggregate-before-shuffle / §2.4): the name
     // columns are functionally determined by c_custkey (primary key), so
@@ -36,8 +33,7 @@ object Breadth {
     // customer-sized aggregate is row-identical — and the fact-sized
     // stage now runs one join instead of three, with the aggregate's
     // exchange carrying (custkey, sum, count) instead of two strings.
-    val perCust = graft.Par.fanKey(li.select(
-        "l_orderkey", "l_quantity"), col("l_orderkey"))
+    val perCust = li.select("l_orderkey", "l_quantity")
       .join(o.select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_custkey")
@@ -449,14 +445,10 @@ object Breadth {
     val W = 86400000000L             // 1-day bucket in µs; any W ≥ gap ok
     val byUserBucket = Window.partitionBy("user_id", "b")
       .orderBy(col("sec").asc, col("event_id").asc)
-    // fanKey (r14): pin the scan-rooted (user, bucket) window exchange at
-    // machine width — AQE size-coalescing folded the ~4 MB exchange to
-    // one task and serialized the two window passes. Scale-guarded.
-    val frags = graft.Par.fanKey(Tables.events(s, dir)
-        .select("user_id", "event_id", "ts")
-        .withColumn("sec", expr("unix_micros(ts)"))
-        .withColumn("b", expr(s"sec div ${W}L")),
-        col("user_id"), col("b"))
+    val frags = Tables.events(s, dir)
+      .select("user_id", "event_id", "ts")
+      .withColumn("sec", expr("unix_micros(ts)"))
+      .withColumn("b", expr(s"sec div ${W}L"))
       .withColumn("prev_sec", lag("sec", 1).over(byUserBucket))
       .withColumn("is_new",
         when(col("prev_sec").isNull || col("sec") - col("prev_sec") > GAP, 1L)
@@ -536,9 +528,7 @@ object Breadth {
     * count — the narrow frame both the sketch and the exact distinct
     * then aggregate without any per-pair sketch state. */
   private def approxDistinctPairs(s: SparkSession, dir: String): DataFrame =
-    graft.Par.fanKey(
-        Tables.lineitem(s, dir).select("l_returnflag", "l_partkey"),
-        col("l_returnflag"), col("l_partkey"))
+    Tables.lineitem(s, dir).select("l_returnflag", "l_partkey")
       .groupBy("l_returnflag", "l_partkey")
       .agg(count(lit(1)).as("c"))
 

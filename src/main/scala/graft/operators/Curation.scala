@@ -367,15 +367,11 @@ object Curation {
     // level 1 dedups to one row per (column, value) with its count
     // (map-side compression: the value domains are the data's own
     // cardinality, ≤ |distinct prices| + 70), level 2 folds those ≤110k
-    // narrow rows into the 4 report rows. No Expand anywhere, every
-    // shuffle carries (name, value, count), and the scale-guarded fanKey
-    // keeps the stack + level-1 aggregate at machine width on few-split
-    // inputs. n_nulls folds from the (col_name, NULL) group — no second
-    // scan for the row total.
+    // narrow rows into the 4 report rows. No Expand anywhere, and every
+    // shuffle carries (name, value, count). n_nulls folds from the
+    // (col_name, NULL) group — no second scan for the row total.
     val stackArgs = profileCols.map(c => s"'$c', $c").mkString(", ")
-    val perVal = graft.Par.fanKey(
-        Tables.lineitem(s, dir).select(profileCols.map(col): _*),
-        profileCols.map(col): _*)
+    val perVal = Tables.lineitem(s, dir).select(profileCols.map(col): _*)
       .selectExpr(s"stack(${profileCols.size}, $stackArgs) AS (col_name, v)")
       .groupBy("col_name", "v").agg(count(lit(1)).as("c"))
     perVal.groupBy("col_name")

@@ -1551,20 +1551,14 @@ object Dedup {
     // State is bounded: a window count buffers one partition's rows like
     // the join build side would, and postings are capped right after.
     val wh = org.apache.spark.sql.expressions.Window.partitionBy("h")
-    // fanKey (r14): same bytes as the window's own ENSURE_REQUIREMENTS
-    // exchange on h, but an explicit numbered repartition AQE cannot
-    // size-coalesce — the ~36 MB digest exchange was folding to ONE task
-    // and serializing the posting-cap window + pair self-join
-    // (q_dedup_savings 1.70 s → 1.97 s when the fleet conf landed).
-    // Scale-guarded: only fires on the dev fixture's single-split scan.
-    val kept = graft.Par.fanKey(seeds, col("h"))
+    val kept = seeds
       .withColumn("pn", count(lit(1)).over(wh))
       .filter(col("pn") <= POSTING_CAP)
       .drop("pn")
     // MEASURED NON-WIN (r15, do not re-try): hint("merge") on both sides
     // to force SMJ — the static plan prints BroadcastHashJoin here at
     // sf0.1, which LOOKS like the seed pipeline is built twice, but the
-    // runtime stage profile shows the fanKey exchange is written once
+    // runtime stage profile shows the digest exchange is written once
     // (9.6 MB) and read twice (19.2 MB) — AQE stage reuse already feeds
     // both join sides from one seed build regardless of strategy. The
     // SMJ pin benched flat (1.80 → 1.69–1.87 s, 4-pass stage profile).

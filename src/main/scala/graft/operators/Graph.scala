@@ -51,14 +51,7 @@ object Graph {
     * [[ORDER_CAP]]) — the filter runs on the collected set's size, so
     * the quadratic fan-out never happens. */
   private[graft] def copurchaseEdges(li: DataFrame): DataFrame =
-    // fanKey (r15): the basket aggregate's orderkey exchange is byte-small
-    // so AQE size-coalescing folded the reduce side to 1-2 tasks — and the
-    // quadratic pair explode above it inherited that width in the cold
-    // build job (q_pagerank pass-1: 4.9 s). The explicit machine-width pin
-    // is AQE-proof, the groupBy reuses it, and it never fires on a
-    // multi-split production scan (Par guard).
-    graft.Par.fanKey(li, col("l_orderkey"))
-      .groupBy("l_orderkey").agg(collect_set("l_partkey").as("ps"))
+    li.groupBy("l_orderkey").agg(collect_set("l_partkey").as("ps"))
       .filter(size(col("ps")) <= ORDER_CAP)
       .select(explode(col("ps")).as("src"), col("ps"))
       .select(col("src"), explode(col("ps")).as("dst"))
@@ -237,11 +230,7 @@ object Graph {
     * [[ORDER_CAP]] guard as [[copurchaseEdges]] — the suffix explode is
     * C(|order|, 2). */
   private[graft] def affinityEdgesOn(li: DataFrame): DataFrame =
-    // fanKey (r15): same width pin as [[copurchaseEdges]] — the C(n,2)
-    // suffix explode ran on the AQE-coalesced 1-2 task reduce side of
-    // this byte-small exchange in every first-touch build.
-    graft.Par.fanKey(li, col("l_orderkey"))
-      .groupBy("l_orderkey").agg(sort_array(collect_set("l_partkey")).as("ps"))
+    li.groupBy("l_orderkey").agg(sort_array(collect_set("l_partkey")).as("ps"))
       .filter(size(col("ps")) <= ORDER_CAP)
       // upper triangle only: each element pairs with the SORTED array's
       // strict suffix, so a < b holds by construction and the generator
@@ -907,10 +896,7 @@ object Graph {
     // supports, rule joins) needs this frame, so one eager
     // materialization is on the critical path regardless; pinning it
     // makes the fact table's orderkey shuffle happen exactly once.
-    // fanKey keeps the collect_set reduce at machine width (the byte-
-    // small exchange otherwise AQE-coalesces to 1-2 tasks).
-    val baskets = graft.Par.fanKey(li, col("l_orderkey"))
-      .groupBy("l_orderkey")
+    val baskets = li.groupBy("l_orderkey")
       .agg(collect_set("l_partkey").as("ps"))
       .filter(size(col("ps")) <= ORDER_CAP)
       .localCheckpoint()
@@ -1013,12 +999,13 @@ object Graph {
   private[graft] def assocEvalOn(train: DataFrame, test: DataFrame,
                                  und0: DataFrame = null): DataFrame = {
     val und = if (und0 != null) und0 else affinityEdgesOn(train)
-    // MEASURED LOSER (r15, do not re-try): fanKey on this basket
-    // aggregate + an eager localCheckpoint of the test baskets below —
-    // the stage profile showed 1-task reduce stages, but the full
-    // interleaved bench measured the combination +9%/+20% drift-adjusted
-    // in two independent runs; the branchy original overlaps its
-    // recomputes better than the pinned shape serializes. Reverted.
+    // MEASURED LOSER (r15, do not re-try): an eager localCheckpoint of
+    // the test baskets below, with this basket aggregate repartitioned
+    // to machine width on l_orderkey — the stage profile showed 1-task
+    // reduce stages, but the full interleaved bench measured the
+    // combination +9%/+20% drift-adjusted in two independent runs; the
+    // branchy original overlaps its recomputes better than the pinned
+    // shape serializes. Reverted.
     val itemCnt = train.groupBy("l_orderkey")
       .agg(collect_set("l_partkey").as("ps"))
       .filter(size(col("ps")) <= ORDER_CAP)

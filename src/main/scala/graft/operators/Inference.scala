@@ -403,16 +403,10 @@ object Inference {
     * the exact interpolated quantile over the 32 replicate means (the
     * engine-portable percentile ↔ quantile_cont pair). */
   def bootstrapCi(s: SparkSession, dir: String): DataFrame = {
-    // fanKey the 2-column projection (r14): the B/4 md5 digests per row
-    // are the dominant per-row cost (the comment below), and the
-    // fixture's single-split scan serialized all 1.2M digests onto one
-    // task (measured 1.86 s warm). Scale-guarded narrow hash exchange on
-    // the unique key (hash, not round-robin: round-robin pays a local
-    // sort of the input first — sortBeforeRepartition).
-    val o = graft.Par.fanKey(Tables.orders(s, dir)
+    val o = Tables.orders(s, dir)
       .select(col("o_orderkey"),
         floor(col("o_totalprice") * lit(100.0d) + lit(0.5d)).cast("long")
-          .as("cents")), col("o_orderkey"))
+          .as("cents"))
     val wCol = POISSON_HEX.zipWithIndex.reverse
       .foldLeft(lit(9L)) { case (els, (hx, k)) =>
         when(col("h") < lit(hx), lit(k.toLong)).otherwise(els)

@@ -637,11 +637,12 @@ object JoinsPlus {
     // path, 1.0→1.5 s; (b) caching urgent.distinct() for its 4
     // consumers: the branches are INDEPENDENT stages Spark runs
     // concurrently, so the redundant recomputes were free parallelism
-    // while the cache fill serialized them; (c) fanKey on the probe
-    // distinct: no effect — the md5 probe wasn't the bottleneck, the
-    // barrier count was. Kept the original shape; the r9 lesson
-    // "recompute across branches can beat a blocking materialization"
-    // generalizes to caches on a wide-core box.)
+    // while the cache fill serialized them; (c) a machine-width
+    // repartition of the probe distinct: no effect — the md5 probe
+    // wasn't the bottleneck, the barrier count was. Kept the original
+    // shape; the r9 lesson "recompute across branches can beat a
+    // blocking materialization" generalizes to caches on a wide-core
+    // box.)
     val m = BLOOM_BITS_PER_KEY * urgent.distinct().count()
     def positions(keyCol: String): org.apache.spark.sql.Column =
       expr((0 until BLOOM_K).map(j =>
@@ -666,13 +667,7 @@ object JoinsPlus {
     // win is the scale posture: the fact-sized probe cache (§5 memory
     // pressure at 100 TB) and two of the three full passes over it drop
     // out, and the stage count roughly halves.
-    // fanKey pins the distinct's byte-small exchange at machine width —
-    // without it AQE size-coalescing folds the reduce to 1-2 tasks and
-    // the md5 position explode above it serializes (the old cached-probe
-    // shape happened to materialize at full width; the cache is gone)
-    val probe = graft.Par
-      .fanKey(Tables.lineitem(s, dir).select(col("l_orderkey").as("k")),
-        col("k"))
+    val probe = Tables.lineitem(s, dir).select(col("l_orderkey").as("k"))
       .distinct()
     val perKey = probe.select(col("k"), explode(positions("k")).as("pos"))
       .join(broadcast(bits.withColumn("hit", lit(1L))), Seq("pos"), "left")

@@ -146,17 +146,11 @@ object Profiling {
     val needDf = needed.toDF("k", "idx")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("k").orderBy("x")
-    // fanKey (r14): pin the window's hash(k) exchange at machine width —
-    // AQE's size-based coalescing otherwise collapses the (dimension-
-    // bounded, few-MB) group exchange to ONE task and serializes every
-    // group's sort (measured 1.16 s → 1.75 s when the fleet turned size
-    // coalescing on; an explicit numbered repartition is never
-    // coalesced, and the window reuses it, so no exchange is added).
     // A DistNtile.withRank range-partitioned rewrite was measured here
-    // too and LOST (2.5 s: its eager localCheckpoint + offset jobs cost
-    // more than the per-group sorts at any group count ≥ 2) — kept the
-    // boring window, documented the loser.
-    val got = graft.Par.fanKey(xs, col("k"))
+    // and LOST (2.5 s: its eager localCheckpoint + offset jobs cost more
+    // than the per-group sorts at any group count ≥ 2) — kept the boring
+    // window, documented the loser.
+    val got = xs
       .withColumn("idx", row_number().over(w).cast("long") - 1L)
       .join(broadcast(needDf), Seq("k", "idx"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
@@ -719,13 +713,7 @@ object Profiling {
                                 base: DataFrame): (DataFrame, Long) =
     spearmanMemo(s, dir) {
       val shortNames = Seq("d", "p", "q", "t")
-      // fanKey (r15): the 4-way explode + (cname, v) partial aggregate ran
-      // on the fixture's single scan split in the first-touch build
-      // (q_spearman pass-1: 5.3 s, longVals ~1.2 s of it) — fan the
-      // 4-column integer projection to machine width first; never fires
-      // on a multi-split production scan (Par guard).
-      val longVals = graft.Par
-        .fanKey(base, shortNames.map(col): _*)
+      val longVals = base
         .select(explode(map(shortNames.flatMap(c =>
           Seq(lit(c), col(c))): _*)).as(Seq("cname", "v")))
         .groupBy("cname", "v").agg(count(lit(1)).as("tw"))
@@ -785,14 +773,7 @@ object Profiling {
           (lit(2L) * (col("s") - lit(colIdx(c) * nRows) - col("tw"))
             + col("tw") + lit(1L)).as(s"r2_$c"))
       val build = if (boundedDomain(c)) broadcast(r2) else r2
-      // fanKey (r14): the one shuffle join (extendedprice) and the 15
-      // DECIMAL(38,0) partial sums above it pipeline in the SAME stage;
-      // AQE's size coalescing folded that ~25 MB exchange to one task
-      // and serialized the whole measure pass (1.16 s → 1.66 s when the
-      // fleet conf landed). The explicit width pin is never coalesced
-      // and never fires on a multi-split production scan.
-      val left = if (boundedDomain(c)) df else graft.Par.fanKey(df, df(c))
-      left.join(build, left(c) === col(s"_v_$c")).drop(s"_v_$c")
+      df.join(build, df(c) === col(s"_v_$c")).drop(s"_v_$c")
     }
     def dsum(e: Column, alias: String) =
       sum(e.cast("decimal(38,0)")).cast("double").as(alias)
@@ -2083,14 +2064,13 @@ object Profiling {
     // merging 600k near-unique partials on one (AQE-coalesced) task
     // (measured 592 ms scan + 310 ms merge of the 1.13 s total). The
     // plain checks become a partial-aggregating single pass with a 1-row
-    // exchange; the distinct pair count fans to machine width on the
-    // 2-column projection and both branches overlap as independent
-    // stages. Same values, same output schema.
+    // exchange; the distinct pair count runs on the 2-column projection
+    // and both branches overlap as independent stages. Same values, same
+    // output schema.
     // not-null filter mirrors countDistinct exactly (it skips rows with
     // any null argument; bare distinct would count a null pair as a key)
-    val uniq = graft.Par.fanKey(li.select("l_orderkey", "l_linenumber")
-        .where(col("l_orderkey").isNotNull && col("l_linenumber").isNotNull),
-        col("l_orderkey"), col("l_linenumber"))
+    val uniq = li.select("l_orderkey", "l_linenumber")
+      .where(col("l_orderkey").isNotNull && col("l_linenumber").isNotNull)
       .distinct().agg(count(lit(1)).as("n_uniq_pairs"))
     val wide = li.agg(
       count(lit(1)).as("n"),

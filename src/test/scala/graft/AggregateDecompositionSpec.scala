@@ -4,30 +4,10 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-/** The r14 scale-adaptive fan-out helper + the operator rewrites that
-  * ride it: semantics must be exchange-invariant, and the guard must be
-  * inert when the plan is already at least machine-wide. */
-class ParSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
-
-  test("fan/fanKey preserve the row multiset") {
-    val df = Tables.orders(spark, sfDir).select("o_orderkey", "o_custkey")
-    val a = df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    val b = Par.fan(df).collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    val c = Par.fanKey(df, col("o_orderkey")).collect()
-      .map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    assert(b == a); assert(c == a)
-  }
-
-  test("fan fires on a below-cores plan and is inert at/above cores") {
-    val cores = spark.sparkContext.defaultParallelism
-    val narrow = spark.range(100).repartition(1).toDF("id")
-    assert(Par.fan(narrow).rdd.getNumPartitions == cores)
-    val wide = spark.range(100).repartition(cores + 4).toDF("id")
-    // inert: no new exchange above the existing repartition
-    val plan = Par.fan(wide).queryExecution.optimizedPlan
-    assert(Par.fan(wide).rdd.getNumPartitions == cores + 4,
-      s"guard must not re-partition an already-wide plan:\n$plan")
-  }
+/** The r14 aggregate decompositions: the approx-distinct pair dedup and
+  * the columnProfile unpivot each equal their direct form, and no
+  * exchange carries per-pair sketch state. */
+class AggregateDecompositionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("approx-distinct pair decomposition matches the direct sketch form") {
     // HLL is duplicate-insensitive: the contract query's est over deduped

@@ -29,6 +29,17 @@ class GraftSessionSpec extends SparkTestBase {
       s"build the session through GraftSession instead:\n${offenders.mkString("\n")}")
   }
 
+  test("every SPARK_GRAFT_* knob named under src/main is one of the nine") {
+    val knob = "SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]".r
+    val named = sources.filter(_.startsWith(Paths.get("src", "main")))
+      .flatMap(p => knob.findAllIn(Files.readString(p))).toSet
+    val expected = Set("CPUS", "SF_DIR", "ONLY", "BENCH_PASSES", "SCALE",
+      "SCALE_TOPN", "SCALE_CENSUS", "PLAN_SUFFIX", "MASTER")
+      .map("SPARK_GRAFT_" + _)
+    assert(named == expected,
+      s"new knobs: ${named -- expected}; gone: ${expected -- named}")
+  }
+
   /** The effective `spark.io.compression.codec` (default included);
     * Spark's resolver is package-private, hence the reflection. */
   private def codecName(conf: SparkConf): String = {
