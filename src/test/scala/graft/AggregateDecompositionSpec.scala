@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
-/** The r14 aggregate decompositions: the approx-distinct pair dedup and
+/** The aggregate decompositions: the approx-distinct pair dedup and
   * the columnProfile unpivot each equal their direct form, and no
   * exchange carries per-pair sketch state. */
 class AggregateDecompositionSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
@@ -41,7 +41,7 @@ class AggregateDecompositionSpec extends SparkTestBase with AdaptiveSparkPlanHel
     assert(got == expected.sortBy(_._1))
   }
 
-  test("no exchange carries per-PAIR sketch state (the r14 decomposition's point)") {
+  test("no exchange carries per-PAIR sketch state") {
     // the flag-level merge exchange legitimately carries HLL register
     // words, but only |flags|×tasks rows of them; the defect the
     // decomposition kills is sketch state on rows KEYED BY the distinct
