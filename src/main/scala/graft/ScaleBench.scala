@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Fleet-wide 10× scale-step measurement (VERDICT r11 #4): the other
   * ~250 registered queries' growth, beyond the 8 risk paths
   * ScalingCurveSpec pins.
@@ -43,40 +41,22 @@ object ScaleBench {
     // from (and links its dims to) this dir, so both legs scan as wide
     val baseDir = ShardFixture.widened(spark,
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val loadStart = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val loadStart = Harness.loadAvg()
     val scaleDir = ScaleFixture.ensure(spark, baseDir, scale)
     val agg = StageMetrics.install(spark)
 
-    /** Wall time only — the full-fleet ranking pass, where the listener
-      * settlement wait would add ~30 s of dead time for nothing. */
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-             dir: String): Double = {
-      val t0 = System.nanoTime()
-      // NonFatal only: an OOM mid-fleet must abort the run, not leave
-      // every later measurement timed on a thrashed heap
-      val ok =
-        try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[scale] FAILED on $dir: ${e.getMessage}"); false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      if (ok) dt else -dt
-    }
-
     /** Wall time + settled stage-metric deltas for one run. */
-    def timeM(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def timeM(name: String, fn: Harness.Query,
               dir: String): (Double, StageMetrics.Snap) = {
       val before = agg.settled()
-      val dt = time(fn, dir)
+      val dt = Harness.run(spark, "scale", name, fn, dir)()
       (dt, agg.settled() - before)
     }
 
     /** Leaf parquet scan locations of the query's BASE plan that hit one
       * of the scaled tables — ratio ≈ 1 on a dims-only query is then
       * self-explaining in the artifact. */
-    def scaledScans(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Seq[String] = {
+    def scaledScans(fn: Harness.Query): Seq[String] = {
       val scaledNames = Seq("documents", "embeddings", "events")
       try {
         val plan = fn(spark, baseDir).queryExecution.optimizedPlan
@@ -98,52 +78,13 @@ object ScaleBench {
       } catch { case scala.util.control.NonFatal(_) => Seq("unknown") }
     }
 
-    // dev-only subset filter (comma-separated names), mirroring Verify;
-    // the driver sets no env and always ranks the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val all = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // warm the session the same way Bench does
-    spark.range(1000).selectExpr("sum(id)").write
-      .format("noop").mode("overwrite").save()
-    // dev-only census mode (SPARK_GRAFT_SCALE_CENSUS=1): the base pass
-    // also captures per-query byte deltas for the WHOLE registry —
-    // shuffle write/read, spill, input — into target/shuffle_census.json,
-    // ranked by shuffle write. This is how the next superlinear shape is
-    // found without waiting for it to crack the slowest-N: a query whose
-    // shuffle bytes rival its input bytes at base scale is a candidate
-    // regardless of its wall time. Costs one listener settle per query.
-    val census = sys.env.get("SPARK_GRAFT_SCALE_CENSUS").contains("1")
-    System.err.println(s"[scale] base pass over ${all.size} queries" +
-      (if (census) " (census mode)" else ""))
-    val censusRows = scala.collection.mutable.ArrayBuffer[
-      (String, Double, StageMetrics.Snap)]()
-    val basePass = all.map { case (name, fn) =>
-      if (census) {
-        val (dt, m) = timeM(fn, baseDir)
-        censusRows += ((name, dt, m))
-        name -> dt
-      } else name -> time(fn, baseDir)
-    }
-    if (census) {
-      import StageMetrics.mb
-      val lines = censusRows.sortBy(-_._3.shuffleWrite).map {
-        case (name, dt, m) =>
-          s"""\"$name\":{"s":$dt,"shuffle_write_mb":${mb(m.shuffleWrite)},""" +
-            s""""shuffle_read_mb":${mb(m.shuffleRead)},""" +
-            s""""spill_mb":${mb(m.spill)},"input_mb":${mb(m.input)}}"""
-      }.mkString("{", ",", "}")
-      try {
-        val p = java.nio.file.Paths.get("target/shuffle_census.json")
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p,
-          (s"""{"metric":"shuffle_census","sf":"$baseDir","queries":$lines}""" + "\n")
-            .getBytes("UTF-8"))
-        ()
-      } catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[scale] could not write census: ${e.getMessage}")
-      }
+    val all = Harness.selected(SparkEntry.queries.keys.toSeq.sorted)
+    Harness.warm(spark, baseDir)
+    System.err.println(s"[scale] base pass over ${all.size} queries")
+    // wall time only: the listener settlement wait of [[timeM]] would add
+    // ~30 s of dead time to the full-fleet ranking pass for nothing
+    val basePass = all.map { name =>
+      name -> Harness.run(spark, "scale", name, SparkEntry.queries(name), baseDir)()
     }
     val slowest = basePass.filter(_._2 > 0).sortBy(-_._2).take(topN)
     System.err.println(s"[scale] top-$topN slowest: " +
@@ -160,7 +101,7 @@ object ScaleBench {
       // measure with the same memory posture — neither inherits the
       // other dir's pinned checkpoint blocks
       Memo.sweep(spark)
-      val fn = all.find(_._1 == name).get._2
+      val fn = SparkEntry.queries(name)
       // t1 > 0 (failed base runs were filtered out of `slowest`); a
       // failed re-measurement keeps its negative marker and is ignored
       // rather than abs'd into a bogus tiny base time.
@@ -171,21 +112,14 @@ object ScaleBench {
       // divide a warm scaled leg by a cold base and understate growth
       // for memoized queries (ADVICE r13) — the exact flags this bench
       // exists to raise.
-      val (t2a, m2a) = timeM(fn, baseDir)
-      val (t2b, m2b) = timeM(fn, baseDir)
       val (t2, m2) =
-        if (t2a < 0 && t2b < 0) (math.min(t2a, t2b), zero)
-        else if (t2b > 0 && (t2a < 0 || t2b < t2a)) (t2b, m2b)
-        else (t2a, m2a)
+        Harness.faster(timeM(name, fn, baseDir), timeM(name, fn, baseDir))
       val base = if (t2 > 0) math.min(t1, t2) else t1
       val baseM = if (t2 > 0) m2 else zero
       Memo.sweep(spark)
-      val (s1, ms1) = timeM(fn, scaleDir)
-      val (s2, ms2) = timeM(fn, scaleDir)
-      val (scaled, scaledM) =
-        if (s1 < 0 && s2 < 0) (math.min(s1, s2), zero) // both failed
-        else if (s2 > 0 && (s1 < 0 || s2 < s1)) (s2, ms2)
-        else (s1, ms1)
+      val (scaled, ms) =
+        Harness.faster(timeM(name, fn, scaleDir), timeM(name, fn, scaleDir))
+      val scaledM = if (scaled > 0) ms else zero
       val tables = scaledScans(fn)
       val ratio = if (scaled > 0 && base > 0) scaled / base else -1.0
       val shuffleRatio =
@@ -218,8 +152,7 @@ object ScaleBench {
         } else None).flatten
       if (why.isEmpty) None else Some(r.name -> why.mkString("+"))
     }
-    val load = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val load = Harness.loadAvg()
     import StageMetrics.mb
     val qjson = rows.map { r =>
       val ts = r.tables.map(t => s"\"" + t + "\"").mkString("[", ",", "]")
@@ -242,14 +175,7 @@ object ScaleBench {
       .mkString("{", ",", "}")
     val out =
       s"""{"metric":"scale10","scale":$scale,"top_n":${rows.size},"flag_ratio":${FLAG_FACTOR * scale},"flagged":$fjson,"flag_reasons":$fwhy,"loadavg_start":$loadStart,"loadavg_end":$load,"queries":$qjson,"base_sf":"$baseDir"}"""
-    try {
-      val p = java.nio.file.Paths.get(s"target/scale${scale}_ratios.json")
-      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (out + "\n").getBytes("UTF-8"))
-      ()
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[scale] could not write artifact: ${e.getMessage}")
-    }
+    Harness.writeArtifact(s"target/scale${scale}_ratios.json", out)
     spark.stop()
     println(out)
     System.out.flush()

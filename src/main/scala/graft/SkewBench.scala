@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Skewed-vs-uniform cost measurement over the hot-key-sensitive query
   * set — the robustness axis the uniform scale curve (SCALE10/40/100)
   * cannot see.
@@ -55,19 +53,17 @@ object SkewBench {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val spark = GraftSession(GraftSession.cpus(32))
-    val loadStart = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val loadStart = Harness.loadAvg()
     val uniformDir = ScaleFixture.ensure(spark, baseDir, scale)
     val skewDir = SkewFixture.ensure(spark, baseDir, scale)
     val agg = StageMetrics.install(spark)
 
-    /** Min-of-2 wall time + metrics/imbalance of the faster run. Fatal
-      * JVM errors (OOM — the exact failure a skew bench hunts) PROPAGATE:
-      * timing the remaining queries on a thrashed heap would fill the
-      * artifact with garbage nothing marks as invalid. Query-level
-      * failures return a negative time, surfaced as an `error` flag. */
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): (Double, StageMetrics.Snap, Double) = {
+    /** Min-of-2 wall time + metrics/imbalance of the faster run
+      * ([[Harness.run]]: a fatal JVM error — an OOM, the exact failure a
+      * skew bench hunts — ends the run; a query-level failure returns a
+      * negative time, surfaced as an `error` flag). */
+    def measure(name: String, fn: Harness.Query,
+                dir: String): (Double, (StageMetrics.Snap, Double)) = {
       // cold-memo isolation PER LEG (SKEW100 lessons, in order): pinned
       // localCheckpoint memos accumulated across 23 queries × 2 dirs
       // starved execution memory until hot tasks died with
@@ -78,39 +74,22 @@ object SkewBench {
       // per leg gives both legs the same memory posture; run 1 builds,
       // run 2 is warm, min-of-2 picks the warm run as before.
       Memo.sweep(spark)
-      def one(): (Double, StageMetrics.Snap, Double) = {
+      def one(): (Double, (StageMetrics.Snap, Double)) = {
         val before = agg.settled()
         agg.drainImbalance() // clear stages billed to earlier work
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-          catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[skew] FAILED on $dir: ${e.getMessage}"); false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        val m = agg.settled() - before
-        val imb = agg.drainImbalance()
-        (if (ok) dt else -dt, m, imb)
+        val dt = Harness.run(spark, "skew", name, fn, dir)()
+        (dt, (agg.settled() - before, agg.drainImbalance()))
       }
-      val a = one(); val b = one()
-      if (a._1 < 0 && b._1 < 0) a
-      else if (b._1 > 0 && (a._1 < 0 || b._1 < a._1)) b else a
+      Harness.faster(one(), one())
     }
 
     val registry = SparkEntry.queries
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val names = skewQueries
-      .filter(n => only.forall(_.contains(n)))
-      .filter { n =>
-        val in = registry.contains(n)
-        if (!in) System.err.println(s"[skew] not in registry, skipped: $n")
-        in
-      }
-    // warm the session the same way Bench does
-    spark.range(1000).selectExpr("sum(id)").write
-      .format("noop").mode("overwrite").save()
+    val names = Harness.selected(skewQueries).filter { n =>
+      val in = registry.contains(n)
+      if (!in) System.err.println(s"[skew] not in registry, skipped: $n")
+      in
+    }
+    Harness.warm(spark, baseDir)
     System.err.println(s"[skew] ${names.size} queries, uniform vs skewed ×$scale")
 
     final case class Row(name: String, uni: Double, skw: Double,
@@ -119,8 +98,8 @@ object SkewBench {
                          skwImb: Double, shuffleRatio: Double)
     def measureRow(name: String): Row = {
       val fn = registry(name)
-      val (u, um, ui) = measure(fn, uniformDir)
-      val (s, sm, si) = measure(fn, skewDir)
+      val (u, (um, ui)) = measure(name, fn, uniformDir)
+      val (s, (sm, si)) = measure(name, fn, skewDir)
       val ratio = if (u > 0 && s > 0) s / u else -1.0
       val shuffleRatio =
         if (u > 0 && s > 0 && um.shuffleWrite >= SHUFFLE_FLOOR_BYTES)
@@ -175,8 +154,7 @@ object SkewBench {
       val why = flagsOf(r)
       if (why.isEmpty) None else Some(r.name -> why.mkString("+"))
     }
-    val load = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean.getSystemLoadAverage
+    val load = Harness.loadAvg()
     import StageMetrics.mb
     def r2(v: Double): Double = math.floor(v * 100.0 + 0.5) / 100.0
     val qjson = rows.map { r =>
@@ -196,14 +174,7 @@ object SkewBench {
       .mkString("{", ",", "}")
     val out =
       s"""{"metric":"skew","scale":$scale,"n_queries":${rows.size},"flag_time_ratio":$FLAG_TIME_RATIO,"flagged":$fjson,"flag_reasons":$fwhy,"loadavg_start":$loadStart,"loadavg_end":$load,"queries":$qjson,"base_sf":"$baseDir"}"""
-    try {
-      val p = java.nio.file.Paths.get(s"target/skew${scale}_ratios.json")
-      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (out + "\n").getBytes("UTF-8"))
-      ()
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[skew] could not write artifact: ${e.getMessage}")
-    }
+    Harness.writeArtifact(s"target/skew${scale}_ratios.json", out)
     spark.stop()
     println(out)
     System.out.flush()

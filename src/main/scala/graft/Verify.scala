@@ -7,21 +7,10 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession(GraftSession.cpus(4))
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated names); the driver sets no
-    // env and always dumps the full registry
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    Harness.selected(SparkEntry.queries.keys.toSeq.sorted).foreach { name =>
+      Harness.run(spark, "verify", name, SparkEntry.queries(name), sfDir) {
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
-      // drop caches a query pinned (dedup pipelines cache shingle arrays)
-      // so the remaining ~40 queries don't run under its memory pressure
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

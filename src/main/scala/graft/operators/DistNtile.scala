@@ -25,17 +25,13 @@ import org.apache.spark.sql.functions._
   */
 object DistNtile {
 
-  /** Append long column `out` = exact global INCLUSIVE prefix sum of
-    * `weight` under the total order `keys` — the weighted generalization
-    * of steps 1–3: range exchange, per-partition running sum, offsets =
-    * total weight of all lower-ranged partitions (triangular join over
-    * the ≤#shuffle-partitions count frame, broadcast back). With
-    * weight = 1 this is the global row number; with weight = a tie-run
-    * count over a DISTINCT-value frame it yields rank boundaries without
-    * ever ranking facts (the Spearman shape). `keys` must be a unique
-    * total order within `df`. */
-  def withPrefixSum(df: DataFrame, keys: Seq[Column], weight: Column,
-                    out: String): DataFrame = {
+  /** Steps 1–3, weighted: range exchange on `keys`, per-partition running
+    * sum of `weight`, offsets = total weight of all lower-ranged partitions
+    * (triangular join over the ≤#shuffle-partitions count frame,
+    * broadcast back). Returns `df` with long column `out` = the global
+    * INCLUSIVE prefix sum, and the count frame (`_dn_pid`, `_dn_cnt`). */
+  private def rangeRank(df: DataFrame, keys: Seq[Column], weight: Column,
+                        out: String): (DataFrame, DataFrame) = {
     val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // localCheckpoint is NOT an optimization: the counts branch and the
     // window branch below both consume `keyed`, and without pinning,
@@ -56,12 +52,23 @@ object DistNtile {
       .agg(coalesce(sum("b._dn_cnt"), lit(0L)).as("_dn_off"))
     val localW = Window.partitionBy("_dn_pid").orderBy(keys: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    keyed
+    val ranked = keyed
       .withColumn("_dn_rn", sum("_dn_w").over(localW))
       .join(broadcast(offsets), "_dn_pid")
       .withColumn(out, col("_dn_off") + col("_dn_rn"))
       .drop("_dn_pid", "_dn_w", "_dn_rn", "_dn_off")
+    (ranked, counts)
   }
+
+  /** Append long column `out` = exact global INCLUSIVE prefix sum of
+    * `weight` under the total order `keys` — the weighted generalization
+    * of steps 1–3 ([[rangeRank]]). With weight = 1 this is the global row
+    * number; with weight = a tie-run count over a DISTINCT-value frame it
+    * yields rank boundaries without ever ranking facts (the Spearman
+    * shape). `keys` must be a unique total order within `df`. */
+  def withPrefixSum(df: DataFrame, keys: Seq[Column], weight: Column,
+                    out: String): DataFrame =
+    rangeRank(df, keys, weight, out)._1
 
   /** Append long column `out` = exact global row_number (1-based) of
     * `df` under the total order `keys` — [[withPrefixSum]] with
@@ -80,31 +87,13 @@ object DistNtile {
     * partition-dependent, exactly as with the window form. */
   def withNtile(df: DataFrame, buckets: Int, keys: Seq[Column],
                 out: String): DataFrame = {
-    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // localCheckpoint: pin ONE range partitioning for all three
-    // consumers (counts, total, window) — see [[withPrefixSum]]; a
-    // re-executed range exchange resamples boundaries and the offset
-    // join then mixes two different partitionings.
-    val keyed = df.repartitionByRange(parts, keys: _*)
-      .withColumn("_dn_pid", spark_partition_id())
-      .localCheckpoint()
-    // per-range-partition counts: tiny (≤ `parts` rows); offsets = rows
-    // in all lower-ranged partitions (left join keeps the pid-0 row)
-    val counts = keyed.groupBy("_dn_pid").agg(count(lit(1)).as("_dn_cnt"))
-    val offsets = counts.as("a")
-      .join(counts.as("b"), col("b._dn_pid") < col("a._dn_pid"), "left")
-      .groupBy(col("a._dn_pid").as("_dn_pid"))
-      .agg(coalesce(sum("b._dn_cnt"), lit(0L)).as("_dn_off"))
+    val (ranked, counts) = rangeRank(df, keys, lit(1L), "_dn_rnk")
     val total = counts.agg(sum("_dn_cnt").as("_dn_total"))
-    val localW = Window.partitionBy("_dn_pid").orderBy(keys: _*)
     val base = floor(col("_dn_total") / buckets).cast("long")
     val rem  = (col("_dn_total") % buckets).cast("long")
     val head = rem * (base + lit(1L)) // rows covered by the base+1 buckets
-    keyed
-      .withColumn("_dn_rn", row_number().over(localW).cast("long"))
-      .join(broadcast(offsets), "_dn_pid")
+    ranked
       .crossJoin(broadcast(total))
-      .withColumn("_dn_rnk", col("_dn_off") + col("_dn_rn"))
       // when N < buckets, base = 0 and every rank falls in the head
       // branch, so the otherwise-branch division never evaluates
       .withColumn(out,
@@ -112,6 +101,6 @@ object DistNtile {
              floor((col("_dn_rnk") - 1) / (base + lit(1L))).cast("long") + 1L)
           .otherwise(
              rem + floor((col("_dn_rnk") - head - 1) / base).cast("long") + 1L))
-      .drop("_dn_pid", "_dn_rn", "_dn_off", "_dn_total", "_dn_rnk")
+      .drop("_dn_total", "_dn_rnk")
   }
 }

@@ -1051,13 +1051,7 @@ object Similarity {
       } else {
         // no completion marker: absent or half-written — clear and build
         graft.BuildMeter.record()
-        if (java.nio.file.Files.exists(loc)) {
-          val st = java.nio.file.Files.walk(loc)
-          try st.sorted(
-            java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(java.nio.file.Files.delete(_))
-          finally st.close()
-        }
+        graft.sources.SnapshotLake.deleteRecursively(loc)
         val writer = build.write
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .partitionBy(partCols: _*)

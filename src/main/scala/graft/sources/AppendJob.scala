@@ -66,7 +66,7 @@ object AppendJob {
     val idxTbl = s"$db.docs_mhidx"
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     if (!spark.catalog.tableExists(corpusTbl)) {
-      dropStale(spark, db, "docs_corpus")
+      IngestJob.dropStale(spark, db, "docs_corpus")
       // the corpus partitions by a doc_id hash bucket so UPSERTS rewrite
       // only touched buckets (dynamic partition overwrite), never the
       // whole corpus — the plain-parquet stand-in for Iceberg's MERGE
@@ -87,7 +87,7 @@ object AppendJob {
     * bucket. A `rows` read from the index itself must be materialized
     * (localCheckpoint) first: the old files are deleted before the write. */
   private def writeIndex(spark: SparkSession, db: String, rows: DataFrame): Unit = {
-    dropStale(spark, db, "docs_mhidx")
+    IngestJob.dropStale(spark, db, "docs_mhidx")
     rows.write.mode(SaveMode.Overwrite)
       .partitionBy("pbk")
       .saveAsTable(s"$db.docs_mhidx")
@@ -319,7 +319,7 @@ object AppendJob {
   def ensureSummary(spark: SparkSession, db: String = "graft_lake"): Unit = {
     val sumTbl = s"$db.docs_summary"
     if (!spark.catalog.tableExists(sumTbl)) {
-      dropStale(spark, db, "docs_summary")
+      IngestJob.dropStale(spark, db, "docs_summary")
       summaryAgg(spark.table(s"$db.docs_corpus"), sign = 1L)
         .write.mode(SaveMode.Overwrite).saveAsTable(sumTbl)
     }
@@ -373,7 +373,7 @@ object AppendJob {
     * files survive; same repair as [[IngestJob]]). */
   def reset(spark: SparkSession, db: String): Unit =
     Seq("docs_corpus", "docs_mhidx", "docs_summary").foreach { t =>
-      if (spark.catalog.databaseExists(db)) dropStale(spark, db, t)
+      if (spark.catalog.databaseExists(db)) IngestJob.dropStale(spark, db, t)
     }
 
   private def withShingles(docs: DataFrame): DataFrame = {
@@ -384,16 +384,4 @@ object AppendJob {
       .select("doc_id", "sh")
   }
 
-  private def dropStale(spark: SparkSession, db: String, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $db.$table")
-    val loc = Paths.get(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      s"$db.db", table)
-    if (Files.exists(loc)) {
-      val s = Files.walk(loc)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(Files.delete(_))
-      finally s.close()
-    }
-  }
 }

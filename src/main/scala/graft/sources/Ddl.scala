@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,16 +35,8 @@ object Ddl {
   def createWarehouse(spark: SparkSession, dir: String,
                       db: String = "bootcamp", buckets: Int = 16): Unit = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    // An in-memory catalog forgets tables across JVMs but their files
-    // survive in the warehouse dir; saveAsTable then fails with
-    // LOCATION_ALREADY_EXISTS. Drop both the entry and any stale location.
-    Seq("lineitem_bucketed", "orders_bucketed", "nation_part").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $db.$t")
-      val loc = Paths.get(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        s"$db.db", t)
-      if (Files.exists(loc)) deleteRecursively(loc)
-    }
+    Seq("lineitem_bucketed", "orders_bucketed", "nation_part")
+      .foreach(IngestJob.dropStale(spark, db, _))
     Tables.lineitem(spark, dir).write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, "l_orderkey").sortBy("l_orderkey")
       .saveAsTable(s"$db.lineitem_bucketed")
@@ -88,7 +80,7 @@ object Ddl {
     variants.map { case (name, df) =>
       val path = s"$out/$name"
       df.write.mode(SaveMode.Overwrite).parquet(path)
-      name -> dirBytes(Paths.get(path))
+      name -> SnapshotLake.dirBytes(Paths.get(path))
     }
   }
 
@@ -103,7 +95,7 @@ object Ddl {
       import spark.implicits._
       writeSizeExperiment(spark, dir, out.toString)
         .toDF("variant", "bytes").orderBy("variant")
-    } finally deleteRecursively(out)
+    } finally SnapshotLake.deleteRecursively(out)
   }
 
   /** Hash-green CONTRACT twin of the rows-only [[sortWithinSizes]] (the
@@ -129,7 +121,7 @@ object Ddl {
         m.values.forall(_ > 0L),
         m("sorted_lowcard") < m("unsorted")))
         .toDF("n_variants", "all_nonzero", "lowcard_lt_unsorted")
-    } finally deleteRecursively(out)
+    } finally SnapshotLake.deleteRecursively(out)
   }
 
   private val sortWithinContractSql =
@@ -142,17 +134,4 @@ object Ddl {
       Some(sortWithinContractSql),
       doc = "layout-experiment contract: low-card sortWithinPartitions " +
         "beats unsorted on disk; all variants written"))
-
-  private def deleteRecursively(p: Path): Unit = {
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(Files.delete(_))
-    finally s.close()
-  }
-
-  private def dirBytes(p: Path): Long = {
-    val s = Files.walk(p)
-    try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
-    finally s.close()
-  }
 }

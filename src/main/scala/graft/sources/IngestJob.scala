@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -94,18 +94,14 @@ object IngestJob {
   /** An in-memory catalog forgets tables across JVMs but their files
     * survive in the warehouse dir; saveAsTable then fails with
     * LOCATION_ALREADY_EXISTS. Drop both the entry and any stale location
-    * (same repair as [[Ddl.createWarehouse]]). */
-  private def dropStale(spark: SparkSession, db: String, table: String): Unit = {
+    * — the one warehouse reset of the lake path ([[Ddl.createWarehouse]]
+    * and [[AppendJob]] call it too). */
+  private[sources] def dropStale(spark: SparkSession, db: String,
+                                 table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $db.$table")
-    val loc = Paths.get(
+    SnapshotLake.deleteRecursively(Paths.get(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      s"$db.db", table)
-    if (Files.exists(loc)) {
-      val s = Files.walk(loc)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(Files.delete(_))
-      finally s.close()
-    }
+      s"$db.db", table))
   }
 
   /** The harness-schema manifest mirroring the reference's five-table job:

@@ -1788,6 +1788,13 @@ object SnapshotLake {
       finally s.close()
     }
 
+  /** Bytes on disk under `p` (a file or a directory tree). */
+  private[graft] def dirBytes(p: Path): Long = {
+    val s = Files.walk(p)
+    try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum()
+    finally s.close()
+  }
+
   // ---- registered time-travel query ---------------------------------------
 
   /** Deterministic 5-snapshot timeline over `documents`, built once per

@@ -29,9 +29,21 @@ class DerivedFixtureSpec extends SparkTestBase {
     assert(ShardFixture.widened(spark, twin, root) == twin)
   }
 
+  /** The twin sizes each table by its bytes: `lineitem` keeps the full
+    * [[DerivedFixture.OUT_PARTS]] width, the tiny dims stay one file. */
+  private def sizedByBytes(root: Path, twin: String): Unit = {
+    def parts(t: String): Int = {
+      val s = Files.list(Paths.get(twin, s"$t.parquet"))
+      try s.filter(_.getFileName.toString.startsWith("part-")).count().toInt
+      finally s.close()
+    }
+    assert(parts("lineitem") == DerivedFixture.OUT_PARTS)
+    assert(parts("nation") == 1 && parts("region") == 1)
+  }
+
   private val fixtures = Seq(
     Fixture("shard", ShardFixture.ensure(spark, sfDir, _),
-      Tables.names.map(_ -> 1)),
+      Tables.names.map(_ -> 1), sizedByBytes),
     Fixture("scale x2", ScaleFixture.ensure(spark, sfDir, 2, _), scaled(2)),
     Fixture("skew x2", SkewFixture.ensure(spark, sfDir, 2, _), scaled(2)),
     Fixture("widened", ShardFixture.widened(spark, sfDir, _),

@@ -29,15 +29,30 @@ class GraftSessionSpec extends SparkTestBase {
       s"build the session through GraftSession instead:\n${offenders.mkString("\n")}")
   }
 
-  test("every SPARK_GRAFT_* knob named under src/main is one of the nine") {
+  test("every SPARK_GRAFT_* knob named under src/main is on the known list") {
     val knob = "SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]".r
     val named = sources.filter(_.startsWith(Paths.get("src", "main")))
       .flatMap(p => knob.findAllIn(Files.readString(p))).toSet
-    val expected = Set("CPUS", "SF_DIR", "ONLY", "BENCH_PASSES", "SCALE",
-      "SCALE_TOPN", "SCALE_CENSUS", "PLAN_SUFFIX", "MASTER")
+    val expected = Set("CPUS", "SF_DIR", "ONLY", "SCALE", "SCALE_TOPN",
+      "PLAN_SUFFIX", "MASTER")
       .map("SPARK_GRAFT_" + _)
     assert(named == expected,
       s"new knobs: ${named -- expected}; gone: ${expected -- named}")
+  }
+
+  test("only Harness.scala runs a query's sink, filter or per-query cleanup") {
+    val needles =
+      Seq("format(\"noop\")", "SPARK_GRAFT_ONLY", "Memo.releaseUnowned")
+    val main = sources.filter(_.startsWith(Paths.get("src", "main")))
+    val offenders = for {
+      p <- main if p.getFileName.toString != "Harness.scala"
+      text = Files.readString(p)
+      n <- needles if text.contains(n)
+    } yield s"$p: $n"
+    assert(offenders.isEmpty,
+      s"run queries through graft.Harness instead:\n${offenders.mkString("\n")}")
+    assert(main.exists(_.endsWith("Harness.scala")),
+      "source walk must include graft/Harness.scala")
   }
 
   /** The effective `spark.io.compression.codec` (default included);
