@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+
+import scala.util.Try
 
 import graft.sources.SnapshotLake
 
@@ -14,7 +16,8 @@ import graft.sources.SnapshotLake
   * new fingerprint, hence a new directory. A build lands in a sibling
   * temp dir and is published by one atomic rename, so a reader never
   * sees a half-built fixture; when concurrent builders race, the loser
-  * finds the winner's marker and discards its copy. */
+  * finds the winner's marker and discards its copy. A publish removes the
+  * fixtures it supersedes (see [[removeSuperseded]]). */
 object DerivedFixture {
 
   /** Bump on ANY derivation change — keyed into every fingerprint, so a
@@ -61,7 +64,35 @@ object DerivedFixture {
           SnapshotLake.deleteRecursively(tmp)
           if (!published) throw e
       }
+      removeSuperseded(dir, name, fingerprint)
     }
     dir
+  }
+
+  /** Delete each sibling `<name>_<hash>` fixture of `dir` derived from
+    * the same base dir (the fingerprint's first field) under another
+    * fingerprint: a base regeneration or a derivation/builder version bump
+    * supersedes it, and no caller can ask for it again. The dir name
+    * already encodes the builder's parameters, so the base dir is the
+    * only other field compared; fixtures of other base dirs are kept.
+    * Each is renamed to a hidden temp name before deletion, so a reader
+    * never finds a half-deleted fixture under a published name. */
+  private def removeSuperseded(dir: Path, name: String,
+                               fingerprint: String): Unit = {
+    def base(fp: String) = fp.takeWhile(_ != '|')
+    val sibling = s"\\Q${name}\\E_[0-9a-f]{8}".r
+    val s = Files.list(dir.getParent)
+    val stale = try s.toArray.toSeq.map(_.asInstanceOf[Path]).filter { d =>
+      d != dir && sibling.matches(d.getFileName.toString) &&
+        Try(Files.readString(d.resolve("_built"))).toOption.exists(fp =>
+          fp != fingerprint && base(fp) == base(fingerprint))
+    } finally s.close()
+    stale.foreach { d =>
+      val doomed = Files.createTempDirectory(d.getParent, s".${d.getFileName}.")
+      // a concurrent publisher may have removed it first
+      try Files.move(d, doomed.resolve("old"), StandardCopyOption.ATOMIC_MOVE)
+      catch { case _: NoSuchFileException => }
+      SnapshotLake.deleteRecursively(doomed)
+    }
   }
 }

@@ -325,10 +325,15 @@ object AppendJob {
     }
   }
 
+  /** A NULL text counts as 0 tokens. Unguarded, `size(split(NULL))` is
+    * -1 with ANSI off, taking a token off its group per NULL doc, and
+    * NULL with ANSI on, turning an all-NULL group's count NULL. */
   private def summaryAgg(docs: DataFrame, sign: Long): DataFrame =
     docs.groupBy("source", "lang")
       .agg((count(lit(1)) * sign).as("n_docs"),
-        (sum(size(split(col("text"), " ")).cast("long")) * sign).as("n_tokens"))
+        (sum(when(col("text").isNull, lit(0))
+          .otherwise(size(split(col("text"), " "))).cast("long")) * sign)
+          .as("n_tokens"))
 
   /** Fold a CRUD op's row deltas into the summary (no-op until
     * [[ensureSummary]] has been called). The summary is group-cardinality

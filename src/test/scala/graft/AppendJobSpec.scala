@@ -266,7 +266,8 @@ class AppendJobSpec extends SparkTestBase {
     def recomputed() = spark.table(s"$db4.docs_corpus")
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(split(col("text"), " ")).cast("long")).as("n_tokens"))
+        sum(when(col("text").isNull, lit(0))
+          .otherwise(size(split(col("text"), " "))).cast("long")).as("n_tokens"))
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getLong(2), r.getLong(3))).toSet
     def summary() = spark.table(s"$db4.docs_summary")
@@ -287,6 +288,20 @@ class AppendJobSpec extends SparkTestBase {
 
     AppendJob.deleteDocuments(spark, Seq(7L, 880000L).toDF("doc_id"), db4)
     assert(summary() == recomputed(), "delete retraction diverged")
+
+    // a NULL text counts 0 tokens, whether size(NULL) is -1 (ANSI off)
+    // or NULL (ANSI on): one NULL doc joins a populated group, one opens
+    // an all-NULL group
+    Seq("false" -> (0L, "en", "srcS"), "true" -> (880001L, "en", "srcN"))
+      .foreach { case (ansi, (id, lang, source)) =>
+        withConf("spark.sql.ansi.enabled" -> ansi) {
+          AppendJob.upsertDocuments(spark,
+            Seq((id, Option.empty[String], lang, source, 0L))
+              .toDF("doc_id", "text", "lang", "source", "n_chars"), db4)
+          assert(summary() == recomputed(), s"NULL-text upsert diverged (ansi=$ansi)")
+          assert(summary().forall(_._4 >= 0), s"negative n_tokens (ansi=$ansi)")
+        }
+      }
     AppendJob.reset(spark, db4)
   }
 

@@ -86,4 +86,36 @@ class DerivedFixtureSpec extends SparkTestBase {
       }
     }
   }
+
+  test("a publish removes the fixtures it supersedes and keeps other bases'") {
+    val parent = Paths.get("target").toAbsolutePath
+    Files.createDirectories(parent)
+    val root = Files.createTempDirectory(parent, "derived_spec")
+    try {
+      def base(b: String, table: String): String = {
+        Files.createDirectories(root.resolve(b))
+        Files.writeString(root.resolve(b).resolve("t.parquet"), table)
+        root.resolve(b).toString
+      }
+      def publish(name: String, baseDir: String, extra: String) =
+        DerivedFixture.publish(name,
+          DerivedFixture.fingerprint(baseDir, Seq("t"), extra), root) { dir =>
+          Files.writeString(dir.resolve("data"), extra)
+        }
+      val a = base("baseA", "a")
+      val v1 = publish("shard32", a, "shardv1")
+      val otherBase = publish("shard32", base("baseB", "a"), "shardv1")
+      val otherName = publish("scale2", a, "x2")
+      val v2 = publish("shard32", a, "shardv2")
+      assert(v2 != v1 && !Files.exists(v1), "a version bump kept the old fixture")
+      val regenerated = publish("shard32", base("baseA", "bb"), "shardv2")
+      assert(regenerated != v2 && !Files.exists(v2),
+        "a base-stats change kept the old fixture")
+      val s = Files.list(root)
+      val left = try s.toArray.map(_.toString).toSet finally s.close()
+      assert(left == Set(regenerated, otherBase, otherName,
+        root.resolve("baseA"), root.resolve("baseB")).map(_.toString),
+        s"a fixture of another base or name was removed, or a temp dir survived: $left")
+    } finally graft.sources.SnapshotLake.deleteRecursively(root)
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -95,5 +97,62 @@ class IngestJobSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(!spark.catalog.databaseExists(db) ||
       spark.catalog.listTables(db).isEmpty,
       "fail-fast must abort before any write")
+  }
+
+  private def ingestThreads: Seq[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith("graft-ingest-"))
+
+  test("a failed write throws only after every other table's write finished") {
+    val db = "ingestjob_writefail"
+    // both bucket columns are absent from their CSVs, which validation
+    // does not check, so both writes fail; the failing tables come first
+    // and last, so a run that threw at the first failure, or before the
+    // other writes finished, would leave the good tables short or absent
+    val manifest =
+      TableSpec("region_bad", s"$csvDir/region.csv", Seq("r_regionkey"),
+        Bucketed("no_such_key_a")) +:
+        IngestJob.harnessManifest(csvDir) :+
+        TableSpec("nation_bad", s"$csvDir/nation.csv", Seq("n_nationkey"),
+          Bucketed("no_such_key_b"))
+    val ex = intercept[Exception](IngestJob.run(spark, manifest, db))
+    assert(ingestThreads.isEmpty, s"ingest threads survived: $ingestThreads")
+    Seq("lineitem_w" -> "lineitem", "orders_w" -> "orders",
+        "nation_w" -> "nation", "region_w" -> "region",
+        "supplier_w" -> "supplier").foreach { case (w, src) =>
+      assert(spark.catalog.tableExists(s"$db.$w"), s"$w was not written")
+      assert(spark.table(s"$db.$w").count() ==
+        Tables.t(spark, sfDir, src).count(), s"count mismatch for $w")
+    }
+    assert(ex.getMessage.contains("no_such_key_a"),
+      s"expected the first failure in manifest order: ${ex.getMessage}")
+    assert(ex.getSuppressed.exists(_.getMessage.contains("no_such_key_b")),
+      "the later failure must ride along as suppressed")
+  }
+
+  test("the ingest pool never exceeds defaultParallelism and dies with run") {
+    val db = "ingestjob_pool"
+    val cores = spark.sparkContext.defaultParallelism
+    // twice as many tables as cores: without the bound every table
+    // would get its own thread
+    val manifest = (1 to 2 * cores).map(i =>
+      TableSpec(s"region_$i", s"$csvDir/region.csv", Seq("r_regionkey")))
+    @volatile var sampling = true
+    @volatile var most = 0
+    val sampler = new Thread(() =>
+      while (sampling) {
+        most = math.max(most, ingestThreads.count(_.isAlive))
+        Thread.sleep(1)
+      })
+    sampler.start()
+    try IngestJob.run(spark, manifest, db)
+    finally {
+      sampling = false
+      sampler.join()
+    }
+    assert(ingestThreads.isEmpty, s"ingest threads survived: $ingestThreads")
+    assert(most > 0 && most <= cores,
+      s"saw $most live ingest threads; the bound is $cores")
+    manifest.foreach(t => assert(spark.catalog.tableExists(s"$db.${t.name}")))
   }
 }
