@@ -8,7 +8,9 @@ import graft.sources.SnapshotLake
 
 /** The one build-and-publish lifecycle shared by the fixtures derived
   * from a read-only base fixture ([[ScaleFixture]], [[SkewFixture]],
-  * [[ShardFixture]]): each supplies only its table derivation.
+  * [[ShardFixture]]) and by [[SnapshotLake]]'s six snapshot labs
+  * (timeline, branch, partevo, datelab, expire, binpack): each supplies
+  * only its table derivation.
   *
   * A derived fixture lives under an absolute root in a directory named
   * by its fingerprint's hash, so a published fixture is never rewritten

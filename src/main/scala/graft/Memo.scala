@@ -46,8 +46,7 @@ object Memo {
   }
 
   /** [[fingerprint]] as a 1–8 digit hex token, for names of on-disk
-    * tables and lab roots (their stale-variant cleanup matches
-    * `[0-9a-f]{1,8}`). */
+    * index tables (their stale-variant cleanup matches `[0-9a-f]{1,8}`). */
   def fingerprintHex(dir: String, table: String): String = {
     val fp = fingerprint(dir, table)
     java.lang.Long.toHexString((fp ^ (fp >>> 32)) & 0xffffffffL)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import Fmt.fix4
 
 /** Capability-parity breadth beyond the reference's own operator set
   * (SURVEY.md §2.6): window functions (ranking + frames), event-time
@@ -1586,7 +1587,6 @@ object Breadth {
       ds(when(col("variant") === "B", col("y")).otherwise(lit(0L)))
         .as("sy_b"))
     def d(c: String) = col(c).cast("double")
-    def fix4(c: Column) = Fmt.fix4(c)
     w
       .withColumn("vx", d("n") * d("sxx") - d("sx") * d("sx"))
       .withColumn("vy", d("n") * d("syy") - d("sy") * d("sy"))

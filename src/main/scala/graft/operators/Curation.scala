@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import Fmt.fix4
 
 /** Corpus-curation operators for a training-data pipeline, rounding out
   * SURVEY.md §2.8: PII/denylist redaction, target-mixture sampling,
@@ -505,8 +506,6 @@ object Curation {
       .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     val wAll = Window.orderBy("b")
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     axis.join(buckets, Seq("b"), "left")
       .select(col("b"), coalesce(col("nd"), lit(0L)).as("nd"),
         coalesce(col("nt"), lit(0L)).as("nt"))
@@ -584,8 +583,6 @@ object Curation {
         expr("CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':ss')), 1, 8), 16, 10) AS BIGINT)"))
     val sizes = d.groupBy("lang").agg(count(lit(1)).as("n_lang"))
     val budget = sizes.agg(min("n_lang").as("budget"))
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     d.join(broadcast(sizes), Seq("lang"))
       .join(broadcast(budget))
       .withColumn("keep",
@@ -655,8 +652,6 @@ object Curation {
     * (the only shuffle carries the per-source partial aggregate), so the
     * pass is embarrassingly parallel at any corpus size. */
   def spanCorruption(s: SparkSession, dir: String): DataFrame = {
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     Tables.documents(s, dir)
       .select(col("source"),
         expr(s"""
@@ -733,8 +728,6 @@ object Curation {
     * the ≤|buckets|-row aggregate, and the global-max baseline joins as
     * a 1-row broadcast. */
   def paddingWaste(s: SparkSession, dir: String): DataFrame = {
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     val ladder = PAD_BUCKETS.map(b => s"WHEN n_tok <= $b THEN ${b}L")
       .mkString("CASE ", " ", s" ELSE ${PAD_BUCKETS.last}L END")
     val d = Tables.documents(s, dir)
@@ -798,8 +791,6 @@ object Curation {
     * under 2^53 (a 100 TB corpus is ~1e13-1e14 tokens), so the
     * BIGINT→DOUBLE cast before sqrt is exact. */
   def mixtureWeights(s: SparkSession, dir: String): DataFrame = {
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     val perSrc = Tables.documents(s, dir)
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("n_toks"))
@@ -865,8 +856,6 @@ object Curation {
     * memorization risk. Same exact-integer normalizer discipline as the
     * weights table; one scan, ≤|sources|-row aggregate. */
   def epochSchedule(s: SparkSession, dir: String): DataFrame = {
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     val perSrc = Tables.documents(s, dir)
       .select(col("source"),
         size(split(col("text"), " ")).cast("long").as("n_toks"))
@@ -936,8 +925,6 @@ object Curation {
     * leaves the scan. The 5-row output is a final bounded aggregate. */
   def corpusFunnel(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     val docs = Tables.documents(s, dir)
       .withColumn("n_toks", size(split(col("text"), " ")).cast("long"))
     // stage 2: exact keep-one — min doc_id per normalized-text hash
@@ -1155,7 +1142,6 @@ object Curation {
     val normed = probes.unionByName(anchors, allowMissingColumns = true)
       .withColumn("v_norm", last("v_p", ignoreNulls = true).over(wAlign))
       .where(col("tag") === 0)
-    def fix4(c: Column) = Fmt.fix4(c)
     normed.groupBy("source")
       .agg(first("n_s").as("n_docs"),
         sum(col("t").cast("decimal(38,0)") * col("n_chars")).as("sb"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import Fmt.fix4
 
 /** Statistical-inference operators over the event stream and the fact
   * tables: Kaplan-Meier time-to-event estimation, CUSUM changepoint
@@ -549,8 +550,6 @@ object Inference {
     val hl = byLang.join(broadcast(tot))
       .agg(sum(col("n_l") * fixedLn(col("n_l").cast("double")
         / col("n").cast("double"))).as("hl_f"))
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     sums.join(broadcast(hs)).join(broadcast(hl)).join(broadcast(tot))
       .select(col("n_cells"),
         fix4(col("mi_f").cast("double") / col("n").cast("double")
@@ -741,7 +740,6 @@ object Inference {
       .withColumn("v2", (d("q2") - d("s2") * d("s2") / d("n2"))
         / (d("n2") - lit(1.0d)))
       .withColumn("se2", col("v1") / d("n1") + col("v2") / d("n2"))
-    def fix4(c: Column) = Fmt.fix4(c)
     withV.select(
       col("n1").cast("bigint").as("n1"), col("n2").cast("bigint").as("n2"),
       fix4(d("s1") / d("n1")).as("mean_en"),
@@ -845,7 +843,6 @@ object Inference {
           * (d("s_g") / d("n_g") - d("s") / d("n"))
           * (d("s_g") / d("n_g") - d("s") / d("n")) * lit(1000.0d)
           + lit(0.5d)).cast("long"))
-    def fix4(c: Column) = Fmt.fix4(c)
     val f = per.agg(sum("ssb3").as("ssb3"), sum("ssw3").as("ssw3"),
         first("n").as("n"), first("k").as("k"))
       .select(
@@ -1398,7 +1395,6 @@ object Inference {
     val e = ewmaOn(daily).select(col("event_type"), col("day"),
       floor(col("ewma") * lit(10000.0d) + lit(0.5d)).cast("long")
         .as("e4"))
-    def fix4(c: Column) = Fmt.fix4(c)
     base.join(h, Seq("event_type", "day"))
       .join(e, Seq("event_type", "day"))
       .filter(col("x_next").isNotNull && col("snaive").isNotNull)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
+import Fmt.fix4
 
 /** Data-profiling operators a lake operator runs before trusting a table:
   * value-distribution histograms and key-skew detection. Both are the
@@ -1221,7 +1222,6 @@ object Profiling {
           .otherwise(lit(0L))).as("c1"),
         sum(when(col("lag") === 2L, col("a1") * col("a2"))
           .otherwise(lit(0L))).as("c2"))
-    def fix4(c: Column) = Fmt.fix4(c)
     tot.join(c0, "event_type").join(ck, "event_type")
       // guard INSIDE the ratio: ANSI mode turns an eager c1/c0 into a
       // divide error on the degenerate constant series (c0 = 0); the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
 import graft.functions.TextFns
+import Fmt.fix4
 
 /** Text-analysis operators for a training-data pipeline (north-star [N]
   * in SURVEY.md §2.8): language ID, quality scoring, token counting,
@@ -1619,8 +1620,6 @@ object TextAnalysis {
     * (q_approx_distinct) are judged against. */
   def distinctNgrams(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     // ONE corpus scan: unigrams, bigrams, and trigrams tag-union into a
     // single exploded (source, n, g) stream — one partial-aggregate on
     // (source, n, gram) and one shuffle, instead of three scans of the
@@ -1704,8 +1703,6 @@ object TextAnalysis {
     * frame and broadcast back to the per-(lang, word) aggregate. Ties at
     * tier boundaries break by word ASC in both engines. */
   def wordCoverage(s: SparkSession, dir: String): DataFrame = {
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     val pairs = Tables.documents(s, dir)
       .select(col("lang"), explode(TextFns.tokens(col("text"))).as("w"))
       .groupBy("lang", "w").agg(count(lit(1)).as("c"))
@@ -1773,8 +1770,6 @@ object TextAnalysis {
   /** [[dsirAffinity]] over an explicit (doc_id, source, lang, text) frame
     * — the planted-semantics seam (CensusSemanticsSpec). */
   private[graft] def dsirAffinityOn(docs: DataFrame): DataFrame = {
-    val fix4 = (c: org.apache.spark.sql.Column) =>
-      floor(c * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)
     // MEASURED LOSER (r14, do not re-try): .cache() on pairs — the
     // consumers overlap as independent jobs; the cache fill serialized
     // them (1.43 s → 2.17 s at sf0.1, same failure mode as lmScore /

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.DerivedFixture
+
 /** Snapshot / time-travel table layer over plain parquet — the Iceberg
   * table-format semantics the reference's DDL declares
   * (`job1-DDL_Load_Data_Spark_Iceberg.py:223-275` creates `USING iceberg`
@@ -1806,50 +1808,43 @@ object SnapshotLake {
     * function of the documents table, so DuckDB can replay each
     * snapshot's state from filters alone — the oracle checks time travel
     * itself, not just the final state. */
-  private[graft] def ensureTimeline(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
-    val fp = graft.Memo.fingerprintHex(dir, "documents")
-    val base = Paths.get(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "graft_snap")
-    val root = base.resolve(s"docs_${tag}_$fp")
-    this.synchronized {
-      if (currentVersion(root.toString) < 7) {
-        graft.BuildMeter.record()
-        // stale timelines of this dir (other fingerprints) and any
-        // half-built attempt are garbage
-        if (Files.isDirectory(base)) {
-          val ls = Files.list(base)
-          try ls.iterator().asScala.toSeq
-            .filter(_.getFileName.toString.matches(
-              s"docs_${tag}_[0-9a-f]{1,8}"))
-            .foreach(deleteRecursively)
-          finally ls.close()
-        }
-        val d = graft.Tables.documents(s, dir)
-        // id-based: the registered snapshot queries then exercise the
-        // field-id resolution read path end-to-end against the oracle
-        create(d.filter(pmod(col("doc_id"), lit(3)) === 0), root.toString,
-          statsCol = Some("doc_id"), columnIds = true)
-        append(s, d.filter(pmod(col("doc_id"), lit(3)) === 1), root.toString)
-        deleteWhere(s, root.toString, col("lang") === "en")
-        merge(s, root.toString,
-          d.filter(pmod(col("doc_id"), lit(6)) === 0)
-            .withColumn("n_chars", col("n_chars") + lit(1000L)),
-          "doc_id")
-        deleteWhereMor(s, root.toString,
-          col("source").isin(MOR_SOURCES: _*))
-        // v6: EQUALITY MOR delete by key value (no scan of data files);
-        // v7: append AFTER it — same-key rows in the new files must
-        // SURVIVE (sequence rule), which q_snapshot_eqdel oracle-checks
-        deleteWhereMorEq(s, root.toString, {
-          import s.implicits._
-          Seq(EQ_DELETE_LANG).toDF("lang")
-        })
-        append(s, d.filter(pmod(col("doc_id"), lit(3)) === 2), root.toString)
-      }
+  private[graft] def ensureTimeline(s: SparkSession, dir: String,
+                                    root: Path = DerivedFixture.Root): String =
+    publishLab("timeline", dir, "documents", root) { r =>
+      val d = graft.Tables.documents(s, dir)
+      // id-based: the registered snapshot queries then exercise the
+      // field-id resolution read path end-to-end against the oracle
+      create(d.filter(pmod(col("doc_id"), lit(3)) === 0), r,
+        statsCol = Some("doc_id"), columnIds = true)
+      append(s, d.filter(pmod(col("doc_id"), lit(3)) === 1), r)
+      deleteWhere(s, r, col("lang") === "en")
+      merge(s, r,
+        d.filter(pmod(col("doc_id"), lit(6)) === 0)
+          .withColumn("n_chars", col("n_chars") + lit(1000L)),
+        "doc_id")
+      deleteWhereMor(s, r, col("source").isin(MOR_SOURCES: _*))
+      // v6: EQUALITY MOR delete by key value (no scan of data files);
+      // v7: append AFTER it — same-key rows in the new files must
+      // SURVIVE (sequence rule), which q_snapshot_eqdel oracle-checks
+      deleteWhereMorEq(s, r, {
+        import s.implicits._
+        Seq(EQ_DELETE_LANG).toDF("lang")
+      })
+      append(s, d.filter(pmod(col("doc_id"), lit(3)) === 2), r)
     }
-    root.toString
-  }
+
+  /** A lab is a snapshot table derived from `dir`'s `table`, published
+    * whole as `<root>/<name>_<hash>` by [[DerivedFixture.publish]]:
+    * `build` runs its commits against a fresh temp table root (manifest
+    * paths are root-relative, so the rename relocates it), and a reader
+    * only ever finds a lab whose every step ran. */
+  private def publishLab(name: String, dir: String, table: String,
+                         root: Path)(build: String => Unit): String =
+    DerivedFixture.publish(name,
+      DerivedFixture.fingerprint(dir, Seq(table), name), root) { r =>
+      graft.BuildMeter.record()
+      build(r.toString)
+    }.toString
 
   /** The v6 equality delete's key value. */
   private[graft] val EQ_DELETE_LANG = "zh"
@@ -2147,38 +2142,18 @@ object SnapshotLake {
     * main-invisible), then a DIVERGING main append (%3=2, snapshot v3).
     * Separate root from [[ensureTimeline]] so the existing snapshot
     * oracles stay untouched. */
-  private[graft] def ensureBranchLab(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
-    val base = Paths.get(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "graft_snap_branch")
-    val root = base.resolve(
-      s"docs_${tag}_${graft.Memo.fingerprintHex(dir, "documents")}")
-    this.synchronized {
-      if (currentVersion(root.toString) < 3) {
-        graft.BuildMeter.record()
-        // stale labs of this dir (other fingerprints) are garbage
-        if (Files.isDirectory(base)) {
-          val ls = Files.list(base)
-          try ls.iterator().asScala.toSeq
-            .filter(_.getFileName.toString.matches(
-              s"docs_${tag}_[0-9a-f]{1,8}"))
-            .foreach(deleteRecursively)
-          finally ls.close()
-        }
-        deleteRecursively(root)
-        val d = graft.Tables.documents(s, dir)
-        create(d.filter(pmod(col("doc_id"), lit(3)) === 0), root.toString,
-          statsCol = Some("doc_id"))
-        createTag(root.toString, "base")
-        createBranch(root.toString, "staging")
-        appendToBranch(s, d.filter(pmod(col("doc_id"), lit(3)) === 1),
-          root.toString, "staging")
-        append(s, d.filter(pmod(col("doc_id"), lit(3)) === 2), root.toString)
-      }
+  private[graft] def ensureBranchLab(s: SparkSession, dir: String,
+                                     root: Path = DerivedFixture.Root): String =
+    publishLab("branch", dir, "documents", root) { r =>
+      val d = graft.Tables.documents(s, dir)
+      create(d.filter(pmod(col("doc_id"), lit(3)) === 0), r,
+        statsCol = Some("doc_id"))
+      createTag(r, "base")
+      createBranch(r, "staging")
+      appendToBranch(s, d.filter(pmod(col("doc_id"), lit(3)) === 1), r,
+        "staging")
+      append(s, d.filter(pmod(col("doc_id"), lit(3)) === 2), r)
     }
-    root.toString
-  }
 
   /** Census of every ref's view of the branch lab — oracle-checked proof
     * that main, the branch, and the tag each read their own row set
@@ -2219,38 +2194,19 @@ object SnapshotLake {
     * prefix), v6 evolve to identity(lang), v7 append (%6=5, one file per
     * language). Every era's files survive verbatim; only NEW appends
     * adopt the new layout. */
-  private[graft] def ensurePartLab(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
-    val base = Paths.get(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "graft_snap_partevo")
-    val root = base.resolve(
-      s"docs_${tag}_${graft.Memo.fingerprintHex(dir, "documents")}")
-    this.synchronized {
-      if (currentVersion(root.toString) < 7) {
-        graft.BuildMeter.record()
-        if (Files.isDirectory(base)) {
-          val ls = Files.list(base)
-          try ls.iterator().asScala.toSeq
-            .filter(_.getFileName.toString.matches(
-              s"docs_${tag}_[0-9a-f]{1,8}"))
-            .foreach(deleteRecursively)
-          finally ls.close()
-        }
-        deleteRecursively(root)
-        val d = graft.Tables.documents(s, dir)
-        create(d.filter(pmod(col("doc_id"), lit(3)) === 0), root.toString,
-          statsCol = Some("doc_id"))
-        evolvePartitionSpec(root.toString, "mod", "doc_id", 4)
-        append(s, d.filter(pmod(col("doc_id"), lit(3)) === 1), root.toString)
-        evolvePartitionSpec(root.toString, "truncate", "source", 2)
-        append(s, d.filter(pmod(col("doc_id"), lit(6)) === 2), root.toString)
-        evolvePartitionSpec(root.toString, "identity", "lang")
-        append(s, d.filter(pmod(col("doc_id"), lit(6)) === 5), root.toString)
-      }
+  private[graft] def ensurePartLab(s: SparkSession, dir: String,
+                                   root: Path = DerivedFixture.Root): String =
+    publishLab("partevo", dir, "documents", root) { r =>
+      val d = graft.Tables.documents(s, dir)
+      create(d.filter(pmod(col("doc_id"), lit(3)) === 0), r,
+        statsCol = Some("doc_id"))
+      evolvePartitionSpec(r, "mod", "doc_id", 4)
+      append(s, d.filter(pmod(col("doc_id"), lit(3)) === 1), r)
+      evolvePartitionSpec(r, "truncate", "source", 2)
+      append(s, d.filter(pmod(col("doc_id"), lit(6)) === 2), r)
+      evolvePartitionSpec(r, "identity", "lang")
+      append(s, d.filter(pmod(col("doc_id"), lit(6)) === 5), r)
     }
-    root.toString
-  }
 
   /** Once-per-fixture DATE-TRANSFORM LAB over the events table — the
     * layout an append-only event log evolves to in practice: v1 create
@@ -2263,38 +2219,20 @@ object SnapshotLake {
     * file-skipping surface [[readRangeOn]] serves. Named by the EVENTS
     * fingerprint, the table it is built from: an in-place events
     * rewrite rebuilds the lab. */
-  private[graft] def ensureDateLab(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
-    val base = Paths.get(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "graft_snap_datelab")
-    val root = base.resolve(
-      s"ev_${tag}_${graft.Memo.fingerprintHex(dir, "events")}")
-    this.synchronized {
-      if (currentVersion(root.toString) < 7) {
-        graft.BuildMeter.record()
-        if (Files.isDirectory(base)) {
-          val ls = Files.list(base)
-          try ls.iterator().asScala.toSeq
-            .filter(_.getFileName.toString.matches(s"ev_${tag}_[0-9a-f]{1,8}"))
-            .foreach(deleteRecursively)
-          finally ls.close()
-        }
-        deleteRecursively(root)
-        val e = graft.Tables.events(s, dir)
-          .select("event_id", "ts", "user_id", "event_type")
-        create(e.filter(pmod(col("event_id"), lit(3)) === 0), root.toString,
-          statsCol = Some("event_id,user_id"))
-        evolvePartitionSpec(root.toString, "day", "ts")
-        append(s, e.filter(pmod(col("event_id"), lit(3)) === 1), root.toString)
-        evolvePartitionSpec(root.toString, "month", "ts")
-        append(s, e.filter(pmod(col("event_id"), lit(6)) === 2), root.toString)
-        evolvePartitionSpec(root.toString, "hour", "ts")
-        append(s, e.filter(pmod(col("event_id"), lit(6)) === 5), root.toString)
-      }
+  private[graft] def ensureDateLab(s: SparkSession, dir: String,
+                                   root: Path = DerivedFixture.Root): String =
+    publishLab("datelab", dir, "events", root) { r =>
+      val e = graft.Tables.events(s, dir)
+        .select("event_id", "ts", "user_id", "event_type")
+      create(e.filter(pmod(col("event_id"), lit(3)) === 0), r,
+        statsCol = Some("event_id,user_id"))
+      evolvePartitionSpec(r, "day", "ts")
+      append(s, e.filter(pmod(col("event_id"), lit(3)) === 1), r)
+      evolvePartitionSpec(r, "month", "ts")
+      append(s, e.filter(pmod(col("event_id"), lit(6)) === 2), r)
+      evolvePartitionSpec(r, "hour", "ts")
+      append(s, e.filter(pmod(col("event_id"), lit(6)) === 5), r)
     }
-    root.toString
-  }
 
   /** Partition-evolution census: per spec era, the distinct partition
     * values and row counts recorded in the MANIFEST (matching the oracle
@@ -2411,40 +2349,22 @@ object SnapshotLake {
   /** Expiry-lab root: a dedicated 5-commit table (create / append /
     * COW-delete / append / COW-delete), a TAG pinning v2, then
     * `expire(keepFrom = 4)`. Expiry is destructive, so the lab NEVER
-    * shares the main timeline root. Idempotent: after the first build
-    * `currentVersion` is 5 and re-runs observe the already-expired
-    * state (manifests {2, 4, 5} — v1/v3 dropped, v2 tag-pinned). */
-  private[graft] def ensureExpireLab(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
-    val fp = graft.Memo.fingerprintHex(dir, "documents")
-    val base = Paths.get(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "graft_snap")
-    val root = base.resolve(s"exp_${tag}_$fp")
-    this.synchronized {
-      if (currentVersion(root.toString) < 5) {
-        graft.BuildMeter.record()
-        if (Files.isDirectory(base)) {
-          val ls = Files.list(base)
-          try ls.iterator().asScala.toSeq
-            .filter(_.getFileName.toString.matches(
-              s"exp_${tag}_[0-9a-f]{1,8}"))
-            .foreach(deleteRecursively)
-          finally ls.close()
-        }
-        val d = graft.Tables.documents(s, dir)
-        create(d.filter(pmod(col("doc_id"), lit(3)) === 0), root.toString,
-          statsCol = Some("doc_id"))
-        append(s, d.filter(pmod(col("doc_id"), lit(3)) === 1), root.toString)
-        deleteWhere(s, root.toString, col("lang") === "en")
-        append(s, d.filter(pmod(col("doc_id"), lit(3)) === 2), root.toString)
-        deleteWhere(s, root.toString, col("source").isin(MOR_SOURCES: _*))
-        createTag(root.toString, "repro", 2)
-        expire(root.toString, keepFrom = 4)
-      }
+    * shares the main timeline root. Published only after the expiry
+    * ran, so every reader observes the expired state (manifests
+    * {2, 4, 5} — v1/v3 dropped, v2 tag-pinned). */
+  private[graft] def ensureExpireLab(s: SparkSession, dir: String,
+                                     root: Path = DerivedFixture.Root): String =
+    publishLab("expire", dir, "documents", root) { r =>
+      val d = graft.Tables.documents(s, dir)
+      create(d.filter(pmod(col("doc_id"), lit(3)) === 0), r,
+        statsCol = Some("doc_id"))
+      append(s, d.filter(pmod(col("doc_id"), lit(3)) === 1), r)
+      deleteWhere(s, r, col("lang") === "en")
+      append(s, d.filter(pmod(col("doc_id"), lit(3)) === 2), r)
+      deleteWhere(s, r, col("source").isin(MOR_SOURCES: _*))
+      createTag(r, "repro", 2)
+      expire(r, keepFrom = 4)
     }
-    root.toString
-  }
 
   /** Snapshot-expiry census (Iceberg's `expire_snapshots` semantics):
     * after expiring below the retention floor, exactly the retained
@@ -2495,37 +2415,18 @@ object SnapshotLake {
     * `compactSmall(minRows = n/8)`: the threshold sits between the
     * debris and the create file at EVERY sf, so exactly the three small
     * files pack and the create file survives untouched. */
-  private[graft] def ensureBinpackLab(s: SparkSession, dir: String): String = {
-    val tag = dir.replaceAll("[^a-zA-Z0-9]", "_").stripPrefix("_")
-    val base = Paths.get(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-      "graft_snap_binpack")
-    val root = base.resolve(
-      s"docs_${tag}_${graft.Memo.fingerprintHex(dir, "documents")}")
-    this.synchronized {
-      if (currentVersion(root.toString) < 5) {
-        graft.BuildMeter.record()
-        if (Files.isDirectory(base)) {
-          val ls = Files.list(base)
-          try ls.iterator().asScala.toSeq
-            .filter(_.getFileName.toString.matches(
-              s"docs_${tag}_[0-9a-f]{1,8}"))
-            .foreach(deleteRecursively)
-          finally ls.close()
-        }
-        deleteRecursively(root)
-        val d = graft.Tables.documents(s, dir)
-        val n = d.count()
-        create(d.filter(pmod(col("doc_id"), lit(4)) === 0).repartition(1),
-          root.toString, statsCol = Some("doc_id"))
-        (1 to 3).foreach(k =>
-          append(s, d.filter(pmod(col("doc_id"), lit(16)) === k)
-            .repartition(1), root.toString))
-        compactSmall(s, root.toString, minRows = n / 8)
-      }
+  private[graft] def ensureBinpackLab(s: SparkSession, dir: String,
+                                      root: Path = DerivedFixture.Root): String =
+    publishLab("binpack", dir, "documents", root) { r =>
+      val d = graft.Tables.documents(s, dir)
+      val n = d.count()
+      create(d.filter(pmod(col("doc_id"), lit(4)) === 0).repartition(1), r,
+        statsCol = Some("doc_id"))
+      (1 to 3).foreach(k =>
+        append(s, d.filter(pmod(col("doc_id"), lit(16)) === k)
+          .repartition(1), r))
+      compactSmall(s, r, minRows = n / 8)
     }
-    root.toString
-  }
 
   /** Bin-pack census: v4 (pre) and v5 (post) manifest cardinality, the
     * post-pack read, and the post-pack file count — 2 by construction

@@ -36,6 +36,20 @@ class FmtLintSpec extends AnyFunSuite {
       s"banned round(avg( spellings (use Fmt.fix4 + the SQL floor twin):\n${offenders.mkString("\n")}")
   }
 
+  test("no main source but Fmt.scala defines fix4 or fix6 — import Fmt.fix4") {
+    val definition = """\b(val|def)\s+fix[46]\b""".r
+    val offenders = mainSources.filterNot(_.endsWith(Paths.get("operators", "Fmt.scala")))
+      .flatMap { p =>
+        val text = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
+        text.linesIterator.zipWithIndex.collect {
+          case (line, i) if definition.findFirstIn(line).isDefined =>
+            s"$p:${i + 1}: $line"
+        }
+      }
+    assert(offenders.isEmpty,
+      s"local copies of Fmt's rounding helpers (import Fmt.fix4 instead):\n${offenders.mkString("\n")}")
+  }
+
   test("sanity: the sweep actually reads the operator sources") {
     assert(mainSources.exists(_.toString.endsWith("operators/Fmt.scala")),
       "source walk must include graft/operators — path layout changed?")
