@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ import graft.{Q, Tables}
   */
 object Graph {
 
-  private val ROUNDS = 5
+  private[graft] val ROUNDS = 5
   private val TOP = 20
 
   /** Orders with more DISTINCT parts than this are dropped from every
@@ -103,13 +103,13 @@ object Graph {
     pagerankRounds(prepareRankEdges(edges0))
 
   private[graft] def prepareRankEdges(edges0: DataFrame): (DataFrame, Long) = {
-    // cache the edge list PRE-PARTITIONED on the join key: every round's
-    // fan-out join then reuses the cached partitioning (the in-memory
-    // relation reports hash(src) output partitioning, so only the
-    // node-sized rank table exchanges per round — the edge list never
-    // moves again). This also lets all ROUNDS execute as ONE lazy DAG:
-    // no per-round broadcast build or checkpoint job, no driver
-    // round-trips between rounds.
+    // pin the edge list once, so all ROUNDS execute as ONE lazy DAG over
+    // the pinned blocks: no per-round broadcast build or checkpoint job,
+    // no driver round-trips between rounds. The pinned plan does NOT
+    // carry the hash(src) partitioning into the rounds: the checkpoint is
+    // taken of an adaptive plan, whose output partitioning is unknown, so
+    // the scan reports UnknownPartitioning and a round's join re-shuffles
+    // the edge list unless the rank table is small enough to broadcast.
     //
     // ONE exchange builds the whole partitioned+deduped+degreed edge
     // list: hash(src) satisfies the subset-clustering requirement of
@@ -133,11 +133,10 @@ object Graph {
     val pairEstimate = edges0.count()
     val roundParts = math.max(1L,
       math.min(nPart.toLong, pairEstimate / EDGES_PER_ROUND_PART)).toInt
-    // localCheckpoint, not cache: pins the partitioned+degreed edge
-    // blocks (LogicalRDD keeps the hash(src) output partitioning, so
-    // rounds still join exchange-free) AND survives catalog.clearCache —
-    // the [[affinityEdges]] discipline; with cache() every bench pass
-    // silently re-paid the whole edge build inside round 1's DAG.
+    // localCheckpoint, not cache: pins the deduped+degreed edge blocks
+    // AND survives catalog.clearCache — the [[affinityEdges]] discipline;
+    // with cache() every bench pass silently re-paid the whole edge build
+    // inside round 1's DAG.
     val edges = edges0.repartition(roundParts, col("src")).distinct()
       .withColumn("deg", count(lit(1))
         .over(org.apache.spark.sql.expressions.Window.partitionBy("src")))
@@ -152,22 +151,19 @@ object Graph {
     // same doubles DuckDB computes from its 1-row params frame
     val r0 = math.floor(1000000000.0d / n.toDouble).toLong
     val base = math.floor(150000000.0d / n.toDouble + 0.5d).toLong
-    // seed ranks straight off the cached edges: hash(src) already
-    // clusters the distinct, so the seed is exchange-free
-    var ranks = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(r0).as("r"))
-    for (_ <- 1 to ROUNDS) {
-      // one join per round: the node-sized rank table exchanges onto the
-      // cached (src, dst, deg) partitioning, the contribution is computed
-      // per edge, and the groupBy(dst) shuffle is the inherent fan-in.
-      // The symmetric edge set guarantees every node receives ≥ 1
-      // contribution, so no completion join against the node table.
-      ranks = edges.join(ranks, col("src") === col("node"))
-        .groupBy("dst")
-        .agg(sum(floor(lit(0.85d) * col("r") / col("deg") + lit(0.5d)))
-          .as("sc"))
+    // one round: the contribution floor(0.85·r/deg + 0.5) is computed per
+    // edge and the groupBy(dst) shuffle is the inherent fan-in. The
+    // symmetric edge set guarantees every node receives ≥ 1
+    // contribution, so no completion join against the node table.
+    def step(from: DataFrame, r: Column): DataFrame =
+      from.groupBy("dst")
+        .agg(sum(floor(lit(0.85d) * r / col("deg") + lit(0.5d))).as("sc"))
         .select(col("dst").as("node"), (lit(base) + col("sc")).as("r"))
-    }
+    // round 1 in closed form: every src starts at r0, so it needs neither
+    // a seed rank table nor a join
+    var ranks = step(edges, lit(r0))
+    for (_ <- 2 to ROUNDS)
+      ranks = step(edges.join(ranks, col("src") === col("node")), col("r"))
     ranks
   }
 

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.{Q, Tables}
 import graft.functions.VectorFns
@@ -158,46 +159,34 @@ object Similarity {
   private val QBATCH = 8
   private val BATCH_TOPK = 3
 
-  /** Salt width for the two-level per-query top-k: level 1 ranks within
-    * (q_id, salt) — QBATCH × TOPK_SALTS balanced keys — level 2 ranks the
-    * surviving ≤ TOPK_SALTS × k rows per query. No single reducer ever
-    * sees a whole query's scored corpus. */
-  private val TOPK_SALTS = 32
-
   /** Batched multi-query brute-force similarity: top-k per query for a
     * broadcast batch of Q query vectors in ONE corpus scan — the shape a
     * pipeline needs when deduping/linking a batch per pass rather than one
     * probe at a time. The corpus never shuffles: queries broadcast, the
     * scored rows that do shuffle are narrow (q_id, vec_id, label, cos)
-    * tuples — never embeddings — and the exact per-query top-k runs as a
-    * two-level rank (per-(q_id, salt), then per-q_id) so a query's whole
-    * candidate set never lands on one reducer. Ranking is over the
-    * 4-decimal-rounded cosine with a vec_id tiebreak, which is what makes
-    * the DuckDB oracle row-exact. */
-  /** Exact-cosine batch ranking to depth k — the COMPUTE path behind
-    * [[bruteTruth]]'s memo (and the plan PlanShapeSpec pins: queries
-    * broadcast, the corpus is scored in place, only narrow scored
-    * tuples shuffle through the two-level salted top-k). */
+    * tuples — never embeddings. The per-query top-k is one
+    * `row_number() <= k` window, which Spark plans as a partial
+    * `WindowGroupLimit` below the q_id exchange: each map partition ships
+    * at most k rows per query, so no reducer ever receives a query's
+    * whole scored corpus (the local-top-k-then-merge shape of REPOSE).
+    * Ranking is over the 4-decimal-rounded cosine with a vec_id
+    * tiebreak, which is what makes the DuckDB oracle row-exact.
+    *
+    * This is the COMPUTE path behind [[bruteTruth]]'s memo (and the plan
+    * PlanShapeSpec pins). */
   private[graft] def bruteTruthCompute(s: SparkSession, dir: String,
                                        k: Int): DataFrame = {
     val e = corpus(s, dir)
     val qs = e.filter(col("vec_id") < QBATCH)
       .select(col("vec_id").as("q_id"), col("emb").as("q_emb"),
         col("nrm").as("q_nrm"))
-    val scored = e.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("label"),
-        Fmt.fix4(VectorFns.cosineWithNorms("emb", "q_emb", "nrm", "q_nrm"))
-          .as("cos_sim"),
-        pmod(col("vec_id"), lit(TOPK_SALTS.toLong)).as("salt"))
-    val bySalt = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id", "salt")
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
     val byQuery = org.apache.spark.sql.expressions.Window
       .partitionBy("q_id")
       .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored
-      .withColumn("srn", row_number().over(bySalt))
-      .filter(col("srn") <= k)
+    e.join(broadcast(qs), col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"), col("label"),
+        Fmt.fix4(VectorFns.cosineWithNorms("emb", "q_emb", "nrm", "q_nrm"))
+          .as("cos_sim"))
       .withColumn("rn", row_number().over(byQuery))
       .filter(col("rn") <= k)
       .select(col("q_id"), col("rn").cast("long").as("rn"), col("vec_id"),
@@ -213,36 +202,30 @@ object Similarity {
     * SAME-label neighbor (the positive) and the [[HN_NEG]] highest-
     * scoring CROSS-label neighbors (the hard negatives — wrong label,
     * dangerously high cosine; random negatives teach nothing). One
-    * corpus scan against the broadcast query batch; ranking is the
-    * two-level salted top-k per (query, kind), so no reducer sorts a
-    * whole query's scored corpus and only narrow scored tuples
+    * corpus scan against the broadcast query batch; ranking is one
+    * per-(query, kind) `row_number` window whose `rn <= HN_NEG` conjunct
+    * plans a partial `WindowGroupLimit` below the exchange, so no reducer
+    * sorts a whole query's scored corpus and only narrow scored tuples
     * shuffle — at 10⁹ vectors this is the mining job's exact shape. */
   def hardNegatives(s: SparkSession, dir: String): DataFrame = {
     val e = corpus(s, dir)
     val qs = e.filter(col("vec_id") < QBATCH)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-    val scored = e.join(broadcast(qs), col("vec_id") =!= col("q_id"))
+    val byKind = org.apache.spark.sql.expressions.Window
+      .partitionBy("q_id", "kind")
+      .orderBy(col("cos_sim").desc, col("vec_id").asc)
+    e.join(broadcast(qs), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"), col("label"),
         when(col("label") === col("q_label"), lit("pos"))
           .otherwise(lit("neg")).as("kind"),
         Fmt.fix4(VectorFns.cosineWithNorms("emb", "q_emb", "nrm", "q_nrm"))
-          .as("cos_sim"),
-        pmod(col("vec_id"), lit(TOPK_SALTS.toLong)).as("salt"))
-    val bySalt = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id", "kind", "salt")
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    val byKind = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id", "kind")
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored
-      .withColumn("srn", row_number().over(bySalt))
-      .filter(col("srn") <= HN_NEG)
-      .withColumn("rn", row_number().over(byKind).cast("long"))
-      .filter((col("kind") === "pos" && col("rn") <= 1) ||
-        (col("kind") === "neg" && col("rn") <= HN_NEG))
-      .select(col("q_id"), col("kind"), col("rn"), col("vec_id"),
-        col("label"), col("cos_sim"))
+          .as("cos_sim"))
+      .withColumn("rn", row_number().over(byKind))
+      .filter(col("rn") <= HN_NEG &&
+        (col("kind") === "neg" || col("rn") <= 1))
+      .select(col("q_id"), col("kind"), col("rn").cast("long").as("rn"),
+        col("vec_id"), col("label"), col("cos_sim"))
       .orderBy("q_id", "kind", "rn")
   }
 
@@ -274,14 +257,37 @@ object Similarity {
     * top-10, recall/NDCG@5, MRR@[[BATCH_TOPK]], matryoshka@[[MRL_K]]). */
   private val TRUTH_K = 10
 
-  /** Brute-force truth memo per (corpus dir, data fingerprint): the
-    * QBATCH·[[TRUTH_K]] (q_id, rn, vec_id, label, cos_sim) rows are
-    * PLAIN DRIVER DATA — ids and 4dp-rounded scores, model-sized, no
-    * session reference — so they're safe to serve to any session (the
-    * [[trainedProbe]] precedent). */
-  private val truthMemo = new graft.Memo.Local[
-    (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])](
-    "embeddings")
+  /** Driver-side rows with their schema: what a [[graft.Memo.Local]]
+    * entry holds, served to any session as a local relation. */
+  private final case class LocalRows(schema: StructType, rows: Array[Row]) {
+    def toDF(s: SparkSession): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** Query-batch memo per (corpus dir, data fingerprint), ONE build
+    * holding two row sets:
+    *  - the brute-force truth: QBATCH·[[TRUTH_K]] (q_id, rn, vec_id,
+    *    label, cos_sim) rows;
+    *  - the batch's LSH probe rows: QBATCH·LSH_BANDS (q_id, q_emb,
+    *    q_nrm, q_sig, band, nib) rows — each batch query's vector, norm,
+    *    16-bit signature and (band, nibble) bucket keys, so
+    *    [[annLshBatch]] never rescans the corpus to sign its queries.
+    * Both are PLAIN DRIVER DATA — ids, 4dp-rounded scores and at most 32
+    * query-vector rows, no session reference — so they're safe to serve
+    * to any session (the [[trainedProbe]] precedent). */
+  private val truthMemo =
+    new graft.Memo.Local[(LocalRows, LocalRows)]("embeddings")
+
+  private def batchMemo(s: SparkSession, dir: String): (LocalRows, LocalRows) =
+    truthMemo(s, dir) {
+      val e = corpus(s, dir).filter(col("vec_id") < QBATCH)
+        .withColumn("sig", expr(VectorFns.lshSignatureSql("emb", BITS, DIM)))
+      val probes = e.select(col("vec_id"), col("emb"), col("nrm"),
+          col("sig"), bandNibs(col("sig")))
+        .toDF("q_id", "q_emb", "q_nrm", "q_sig", "band", "nib")
+      def rows(df: DataFrame) = LocalRows(df.schema, df.collect())
+      (rows(bruteTruthCompute(s, dir, TRUTH_K)), rows(probes))
+    }
 
   /** The exact cosine top-[[TRUTH_K]] for every batch query, as a local
     * relation off the memo. `q_sim_topk`, `q_sim_topk_batch`,
@@ -291,13 +297,8 @@ object Similarity {
     * batched corpus scan for ground truth instead of six. At 100 TB the
     * truth side is exactly this shape: a sampled query batch scored
     * once, then reused by every evaluation that needs it. */
-  private[graft] def bruteTruth(s: SparkSession, dir: String): DataFrame = {
-    val (schema, rows) = truthMemo(s, dir) {
-      val df = bruteTruthCompute(s, dir, TRUTH_K)
-      (df.schema, df.collect())
-    }
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+  private[graft] def bruteTruth(s: SparkSession, dir: String): DataFrame =
+    batchMemo(s, dir)._1.toDF(s)
 
   /** Registered batch top-k — served from the [[bruteTruth]] memo. */
   def bruteTopKBatch(s: SparkSession, dir: String): DataFrame =
@@ -328,6 +329,30 @@ object Similarity {
   private val LSH_BANDS = 4
   private val LSH_BAND_BITS = BITS / LSH_BANDS
 
+  /** Band `b`'s nibble of a 16-bit signature (or of a signature xor). */
+  private def bandNib(sig: Column, b: Int): Column =
+    shiftright(sig, b * LSH_BAND_BITS)
+      .bitwiseAND(lit((1 << LSH_BAND_BITS) - 1))
+
+  /** A signature exploded into its LSH_BANDS (band, nib) bucket keys. */
+  private def bandNibs(sig: Column): Column =
+    posexplode(array((0 until LSH_BANDS).map(bandNib(sig, _)): _*))
+
+  /** Keep-one rule for band-index candidates. A (query, vector) pair
+    * arrives once per band whose bucket it shares with a probe; `x` is
+    * `sig ^ q_sig` and `collides` says whether a band's xor nibble
+    * matches a probe (nibble 0 for the query's own buckets, ≤ 1 set bit
+    * under flip-1 multi-probe). Returns the LOWEST colliding band
+    * (LSH_BANDS when none does). Filtering `band === firstCollidingBand`
+    * keeps every colliding pair exactly once, row-locally — the lowest
+    * colliding band is unique and is always among the pair's rows — so
+    * no dedup exchange ever carries the candidates' vectors. */
+  private[graft] def firstCollidingBand(x: Column,
+                                        collides: Column => Column): Column =
+    (0 until LSH_BANDS).foldRight(lit(LSH_BANDS)) { (b, none) =>
+      when(collides(bandNib(x, b)), lit(b)).otherwise(none)
+    }
+
   /** Build — once per (sf-dir, data fingerprint) per JVM — the LSH band
     * index: each vector's 16-bit hyperplane signature computed at ingest,
     * exploded into its 4 (band, nibble) bucket keys, written as a catalog
@@ -341,16 +366,14 @@ object Similarity {
       val e = corpus(s, dir)
         .withColumn("sig", expr(VectorFns.lshSignatureSql("emb", BITS, DIM)))
       e.select(col("vec_id"), col("label"), col("emb"), col("nrm"),
-          col("sig"),
-          posexplode(array((0 until LSH_BANDS).map(b =>
-            shiftright(col("sig"), b * LSH_BAND_BITS)
-              .bitwiseAND(lit((1 << LSH_BAND_BITS) - 1))): _*)))
+          col("sig"), bandNibs(col("sig")))
         .toDF("vec_id", "label", "emb", "nrm", "sig", "band", "nib")
     }(Seq("band", "nib"))
 
   /** ANN via random-hyperplane LSH over the ingest-time band index:
     * candidates = rows sharing ≥1 of the query's 4 (band, nibble) buckets
-    * — a partition-pruned scan (asserted in PlanShapeSpec) — then exact
+    * — a partition-pruned scan (asserted in PlanShapeSpec) — kept once
+    * per vector at its first colliding band, then exact
     * hamming(sig, query_sig) ≤ 3 and cosine rescore, top-5. The band
     * prefilter is LOSSLESS for the hamming radius: ≤3 bit flips across 4
     * disjoint bands leave ≥1 band intact (pigeonhole), so the DuckDB
@@ -360,20 +383,15 @@ object Similarity {
     val e = corpus(s, dir)
       .withColumn("sig", expr(VectorFns.lshSignatureSql("emb", BITS, DIM)))
     val qv = e.filter(col("vec_id") === 0)
-    val probes = qv.select(
-        posexplode(array((0 until LSH_BANDS).map(b =>
-          shiftright(col("sig"), b * LSH_BAND_BITS)
-            .bitwiseAND(lit((1 << LSH_BAND_BITS) - 1))): _*)))
-      .toDF("band", "nib")
+    val probes = qv.select(bandNibs(col("sig"))).toDF("band", "nib")
     val q = qv.select(col("emb").as("q_emb"), col("nrm").as("q_nrm"),
       col("sig").as("q_sig"))
     s.table(tbl)
       .join(broadcast(probes), Seq("band", "nib"))
       .filter(col("vec_id") =!= 0)
-      // a vector can match in up to 4 bands; its rows are identical apart
-      // from (band, nib), so dedupe on the id before rescoring
-      .dropDuplicates("vec_id")
       .join(broadcast(q))
+      .filter(col("band") === firstCollidingBand(
+        col("sig").bitwiseXOR(col("q_sig")), _ === 0))
       .withColumn("hamming", expr("bit_count(sig ^ q_sig)").cast("long"))
       .filter(col("hamming") <= 3)
       .select(col("vec_id"), col("label"), col("hamming"),
@@ -425,42 +443,42 @@ object Similarity {
   /** Batched ANN over the same ingest-time band index: ALL of the batch's
     * (band, nibble) buckets probe in ONE index scan (≤ QBATCH × 4
     * partitions read), then per-query exact hamming ≤ 3 + cosine rescore
-    * and a two-level per-query top-k — the amortized shape of running a
-    * probe batch per pass instead of one query at a time. The band
-    * prefilter stays lossless per query (pigeonhole over 4 disjoint
-    * bands), so the DuckDB oracle is the plain per-query hamming-≤3 form
-    * over all vectors. */
+    * and a per-query top-k — the amortized shape of running a probe batch
+    * per pass instead of one query at a time. The batch's probe rows
+    * (vector, norm, signature, bucket keys) are driver data off the
+    * [[batchMemo]], so their buckets become a STATIC partition filter on
+    * the index scan, pruned at planning time, and the corpus is never
+    * rescanned to sign the queries. Each (query, vector) pair is kept at
+    * its first colliding band ([[firstCollidingBand]]) and the top-k is a
+    * single window with a partial `WindowGroupLimit` below its exchange,
+    * so nothing but narrow scored tuples shuffles. The band prefilter
+    * stays lossless per query (pigeonhole over 4 disjoint bands), so the
+    * DuckDB oracle is the plain per-query hamming-≤3 form over all
+    * vectors. */
   def annLshBatch(s: SparkSession, dir: String): DataFrame = {
     val tbl = ensureLshTable(s, dir)
-    val e = corpus(s, dir)
-      .withColumn("sig", expr(VectorFns.lshSignatureSql("emb", BITS, DIM)))
-    val qv = e.filter(col("vec_id") < QBATCH)
-    val probes = qv.select(
-        Seq(col("vec_id").as("q_id"), col("emb").as("q_emb"),
-          col("nrm").as("q_nrm"), col("sig").as("q_sig")) :+
-          posexplode(array((0 until LSH_BANDS).map(b =>
-            shiftright(col("sig"), b * LSH_BAND_BITS)
-              .bitwiseAND(lit((1 << LSH_BAND_BITS) - 1))): _*)): _*)
-      .toDF("q_id", "q_emb", "q_nrm", "q_sig", "band", "nib")
-    val cand = s.table(tbl)
-      .join(broadcast(probes), Seq("band", "nib"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .dropDuplicates("q_id", "vec_id")
+    val probeRows = batchMemo(s, dir)._2
+    // the batch's buckets as a static partition filter
+    val buckets = probeRows.rows
+      .groupMap(_.getAs[Int]("band"))(_.getAs[Long]("nib"))
+      .toSeq.sortBy(_._1)
+      .map { case (band, nibs) =>
+        col("band") === band && col("nib").isin(nibs.distinct.sorted.toSeq: _*)
+      }
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val byQuery = org.apache.spark.sql.expressions.Window
+      .partitionBy("q_id")
+      .orderBy(col("cos_sim").desc, col("vec_id").asc)
+    s.table(tbl).filter(buckets)
+      .join(broadcast(probeRows.toDF(s)), Seq("band", "nib"))
+      .filter(col("vec_id") =!= col("q_id") &&
+        col("band") === firstCollidingBand(
+          col("sig").bitwiseXOR(col("q_sig")), _ === 0))
       .withColumn("hamming", expr("bit_count(sig ^ q_sig)").cast("long"))
       .filter(col("hamming") <= 3)
       .select(col("q_id"), col("vec_id"), col("label"), col("hamming"),
         Fmt.fix4(VectorFns.cosineWithNorms("emb", "q_emb", "nrm", "q_nrm"))
-          .as("cos_sim"),
-        pmod(col("vec_id"), lit(TOPK_SALTS.toLong)).as("salt"))
-    val bySalt = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id", "salt")
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    val byQuery = org.apache.spark.sql.expressions.Window
-      .partitionBy("q_id")
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    cand
-      .withColumn("srn", row_number().over(bySalt))
-      .filter(col("srn") <= BATCH_TOPK)
+          .as("cos_sim"))
       .withColumn("rn", row_number().over(byQuery))
       .filter(col("rn") <= BATCH_TOPK)
       .select(col("q_id"), col("rn").cast("long").as("rn"), col("vec_id"),
@@ -527,9 +545,10 @@ object Similarity {
     * the check is exact while the recall trade stays visible in the query
     * definition — the honest LSH-KNN contract. The join moves (vec_id,
     * sig, band, key) tuples — embeddings never leave the scan — and the
-    * per-vector top-k is the salted two-level rank (no reducer holds a
-    * whole vector's candidate set). Ranking by (hamming, nb_id) is
-    * integer-exact — no float tiebreak ambiguity. */
+    * per-vector top-k is one window whose partial `WindowGroupLimit`
+    * caps what each map partition ships per vector at k rows (no reducer
+    * holds a whole vector's candidate set). Ranking by (hamming, nb_id)
+    * is integer-exact — no float tiebreak ambiguity. */
   def knnJoin(s: SparkSession, dir: String): DataFrame = {
     val sigs = corpus(s, dir)
       .withColumn("sig", expr(VectorFns.lshSignatureSql("emb", KNN_BITS, DIM)))
@@ -550,16 +569,10 @@ object Similarity {
       // hamming, so dedupe the (small) radius survivors, not the
       // candidate stream
       .dropDuplicates("vec_id", "nb_id")
-    val bySalt = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id", "salt")
-      .orderBy(col("hamming").asc, col("nb_id").asc)
     val byVec = org.apache.spark.sql.expressions.Window
       .partitionBy("vec_id")
       .orderBy(col("hamming").asc, col("nb_id").asc)
     cand
-      .withColumn("salt", pmod(col("nb_id"), lit(TOPK_SALTS.toLong)))
-      .withColumn("srn", row_number().over(bySalt))
-      .filter(col("srn") <= KNN_K)
       .withColumn("rn", row_number().over(byVec))
       .filter(col("rn") <= KNN_K)
       .select(col("vec_id"), col("rn").cast("long").as("rn"), col("nb_id"),
@@ -1523,8 +1536,8 @@ object Similarity {
         VectorFns.cosineWithNorms("emb", "q_emb", "nrm", "q_nrm").as("cos"))
       .orderBy(col("cos").desc, col("vec_id").asc).limit(5)
       .select("vec_id")
-    val recall = broadcast(brute5)
-      .join(shortlist.select("vec_id"), Seq("vec_id"), "left_semi")
+    val recall = brute5
+      .join(broadcast(shortlist.select("vec_id")), Seq("vec_id"), "left_semi")
       .agg((count(lit(1)).cast("double") / lit(5.0d))
         .as("shortlist_recall5"))
     reranked.orderBy(col("cos").desc, col("vec_id").asc).limit(5)
@@ -1747,22 +1760,20 @@ object Similarity {
     val e = corpus(s, dir)
       .withColumn("sig", expr(VectorFns.lshSignatureSql("emb", BITS, DIM)))
     val qv = e.filter(col("vec_id") === 0)
-    val probes = qv.select(
-        posexplode(array((0 until LSH_BANDS).map(b =>
-          shiftright(col("sig"), b * LSH_BAND_BITS)
-            .bitwiseAND(lit((1 << LSH_BAND_BITS) - 1))): _*)))
-      .toDF("band", "nib")
+    // a nibble and its 4 one-bit flips are 5 distinct values, so the
+    // 20 (band, nib) probes are distinct without a dedup
+    val probes = qv.select(bandNibs(col("sig"))).toDF("band", "nib")
       .select(col("band"), explode(array(
         (col("nib") +: (0 until LSH_BAND_BITS).map(bit =>
           col("nib").bitwiseXOR(lit(1L << bit)))): _*)).as("nib"))
-      .distinct()
     val q = qv.select(col("emb").as("q_emb"), col("nrm").as("q_nrm"),
       col("sig").as("q_sig"))
     s.table(tbl)
       .join(broadcast(probes), Seq("band", "nib"))
       .filter(col("vec_id") =!= 0)
-      .dropDuplicates("vec_id")
       .join(broadcast(q))
+      .filter(col("band") === firstCollidingBand(
+        col("sig").bitwiseXOR(col("q_sig")), bit_count(_) <= 1))
       .withColumn("hamming", expr("bit_count(sig ^ q_sig)").cast("long"))
       .filter(col("hamming") <= 7)
       .select(col("vec_id"), col("label"), col("hamming"),
@@ -1878,8 +1889,9 @@ object Similarity {
     * oracle-checked [[knnJoin]] graph.
     *
     * Scale shape: the KNN self-join is the heavy part and is already
-    * banded/salted; voting adds one (vec_id, label)-keyed aggregate and a
-    * per-vec_id window over ≤ |labels| vote rows. The census is one row.
+    * banded with a partial-limit top-k; voting adds one (vec_id,
+    * label)-keyed aggregate and a per-vec_id window over ≤ |labels| vote
+    * rows. The census is one row.
     *
     * On the HARNESS fixture the reported accuracy is chance-level
     * (~1/|labels|) by construction: the synthetic embeddings carry no
@@ -1949,27 +1961,33 @@ object Similarity {
     * [[annNdcg]] (graded list quality) and [[annRecall]] (set overlap):
     * per query, the reciprocal of the rank at which the probe returns
     * the true nearest neighbor, 0 when it misses; averaged over the
-    * batch. Both rankings reuse the batch operators, so this is one
-    * corpus scan + one partition-pruned index probe; reciprocal ranks
-    * are floor-fixed to 6 dp and summed as DECIMAL(20,6) (order-free)
-    * before the single final division. */
+    * batch. Both rankings reuse the batch operators: the truth and the
+    * probe rows come off the [[batchMemo]], so a warm run is one
+    * partition-pruned index probe and no corpus scan. A miss adds 0 to
+    * the sum, so only the probe's hits matter: they inner-join the
+    * broadcast truth (≤ QBATCH rows) and the query count is the memo's
+    * — no outer join, no exchange on the truth. Reciprocal ranks are
+    * floor-fixed to 6 dp and summed as DECIMAL(20,6) (order-free) before
+    * the single final division. */
   def annMrr(s: SparkSession, dir: String): DataFrame = {
-    val truth = bruteTruth(s, dir).filter(col("rn") === 1)
+    val truthRows = batchMemo(s, dir)._1
+    val nQueries = truthRows.rows.count(_.getAs[Long]("rn") == 1L).toLong
+    val truth = truthRows.toDF(s).filter(col("rn") === 1)
       .select(col("q_id"), col("vec_id"))
-    val ann = annLshBatch(s, dir)
+    val hits = annLshBatch(s, dir)
       .select(col("q_id"), col("vec_id"), col("rn").as("a_rank"))
-    truth.join(ann, Seq("q_id", "vec_id"), "left")
-      .withColumn("rr",
-        when(col("a_rank").isNotNull,
-          floor(lit(1.0d) / col("a_rank") * lit(1000000.0d) + lit(0.5d))
-            / lit(1000000.0d))
-          .otherwise(lit(0.0d)).cast("decimal(20,6)"))
-      .agg(count(lit(1)).as("n_queries"),
-        sum(when(col("a_rank").isNotNull, 1L).otherwise(0L)).as("n_hit"),
-        sum("rr").as("srr"))
-      .select(col("n_queries"), col("n_hit"),
-        (floor(col("srr").cast("double") / col("n_queries")
-          * lit(10000.0d) + lit(0.5d)) / lit(10000.0d)).as("mrr"))
+      .join(broadcast(truth), Seq("q_id", "vec_id"))
+      .agg(count(lit(1)).as("n_hit"),
+        sum((floor(lit(1.0d) / col("a_rank") * lit(1000000.0d) + lit(0.5d))
+          / lit(1000000.0d)).cast("decimal(20,6)")).as("srr"))
+    // with no truth rows the outer-join form aggregates nothing: n_hit
+    // and mrr are null, and so they stay here
+    val (nHit, mrr) =
+      if (nQueries == 0L) (lit(null).cast("long"), lit(null).cast("double"))
+      else (col("n_hit"),
+        floor(coalesce(col("srr").cast("double"), lit(0.0d)) / lit(nQueries)
+          * lit(10000.0d) + lit(0.5d)) / lit(10000.0d))
+    hits.select(lit(nQueries).as("n_queries"), nHit.as("n_hit"), mrr.as("mrr"))
   }
 
   private lazy val annMrrSql =
@@ -2870,9 +2888,10 @@ object Similarity {
     * full-dim depth is the [[bruteTruth]] memo) (explode to
     * (dims, prefix-slice) rows — a narrow map, never shuffled with the
     * vectors), the per-depth query vector broadcasts, and the per-depth
-    * top-k uses the same two-level salted ranking as [[bruteTopKBatch]]
-    * — no reducer ever sorts a whole depth's scored corpus. Only
-    * (dims, vec_id, rounded score) rows shuffle. */
+    * top-k is the same one-window ranking as [[bruteTruthCompute]]: its
+    * partial `WindowGroupLimit` keeps any reducer from sorting a whole
+    * depth's scored corpus. Only (dims, vec_id, rounded score) rows
+    * shuffle. */
   def matryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
     val e = corpus(s, dir)
     // the full-dim (DIM) ranking IS the brute-force truth — slice(emb,
@@ -2891,19 +2910,13 @@ object Similarity {
       .join(broadcast(q), Seq("dims"))
       .select(col("dims"), col("vec_id"),
         Fmt.fix4(VectorFns.cosineWithNorms("pe", "q_pe", "pn", "q_pn"))
-          .as("cs"),
-        pmod(col("vec_id"), lit(TOPK_SALTS.toLong)).as("salt"))
-    val bySalt = org.apache.spark.sql.expressions.Window
-      .partitionBy("dims", "salt")
-      .orderBy(col("cs").desc, col("vec_id").asc)
+          .as("cs"))
     val byDims = org.apache.spark.sql.expressions.Window
       .partitionBy("dims")
       .orderBy(col("cs").desc, col("vec_id").asc)
     val truth64 = bruteTruth(s, dir)
       .filter(col("q_id") === 0 && col("rn") <= MRL_K)
     val top = scored
-      .withColumn("srn", row_number().over(bySalt))
-      .filter(col("srn") <= MRL_K)
       .withColumn("rn", row_number().over(byDims))
       .filter(col("rn") <= MRL_K)
       .select("dims", "vec_id")
@@ -2951,7 +2964,7 @@ object Similarity {
     Q("q_matryoshka_recall", matryoshkaRecall, Some(matryoshkaRecallSql),
       doc = "Matryoshka truncation eval: recall@10 of prefix-truncated " +
         "(8/16/32-dim) cosine rankings vs the full 64-dim ranking — one " +
-        "exploded corpus scan, salted two-level per-depth top-k"),
+        "exploded corpus scan, partial-limit per-depth top-k"),
     Q("q_hybrid_rrf", hybridRrf, Some(hybridRrfSql)),
     Q("q_sim_pq", pqTopK, Some(pqTopKSql),
       doc = "product-quantized ANN: per-subspace exact-integer L2 " +
@@ -2986,7 +2999,7 @@ object Similarity {
     Q("q_hard_negatives", hardNegatives, Some(hardNegativesSql),
       doc = "Contrastive-training feed: per batch query the best " +
         "same-label positive + top-3 cross-label hard negatives, " +
-        "two-level salted per-(query, kind) ranking, one corpus scan"),
+        "partial-limit per-(query, kind) ranking, one corpus scan"),
     Q("q_data_maps", dataMaps, Some(dataMapsSql),
       doc = "Dataset cartography: per-example confidence (rounds " +
         "correct) x variability (correctness flips) census over the " +

@@ -6,10 +6,10 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
-import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.types.ArrayType
+import org.apache.spark.sql.execution.window.{Partial, WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-import graft.operators.{Breadth, Dedup, JoinsPlus}
+import graft.operators.{Breadth, Dedup, Graph, JoinsPlus, Similarity}
 
 /** Physical-plan assertions for the SCALE claims the result oracle cannot
   * see: what the shuffles actually carry, and how many there are. These are
@@ -257,6 +257,56 @@ class PlanShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       assert(sc.partitionFilters.nonEmpty,
         s"batched probe reads every band partition:\n$sc")
     }
+  }
+
+  test("ann probes and their evaluations never shuffle a vector") {
+    // by TYPE, not by name: a dedup's partial `first` buffers carry the
+    // candidates' vectors under generated names a name list cannot see
+    val probes = Seq(
+      "annLsh" -> Similarity.annLsh _,
+      "annLshBatch" -> Similarity.annLshBatch _,
+      "annLshMultiprobe" -> Similarity.annLshMultiprobe _,
+      "q_ann_mrr" -> Similarity.annMrr _,
+      "q_ann_recall" -> Similarity.annRecall _,
+      "q_ann_ndcg" -> Similarity.annNdcg _)
+    val offenders = probes.flatMap { case (name, fn) =>
+      exchanges(fn(spark, sfDir)).flatMap(_.output.collect {
+        case a if (a.dataType match {
+          case ArrayType(DoubleType | FloatType, _) => true
+          case _ => false
+        }) => s"$name: ${a.name}"
+      })
+    }
+    assert(offenders.isEmpty,
+      s"vector columns crossed a shuffle: ${offenders.mkString(", ")}")
+  }
+
+  test("every per-key top-k plans a partial group limit below its exchange") {
+    // one row_number window per site: the partial WindowGroupLimit caps
+    // what each map partition ships per key at k rows, so no reducer
+    // receives a key's whole scored set
+    val sites = Seq(
+      "bruteTruthCompute" -> Similarity.bruteTruthCompute(spark, sfDir, 3),
+      "hardNegatives" -> Similarity.hardNegatives(spark, sfDir),
+      "annLshBatch" -> Similarity.annLshBatch(spark, sfDir),
+      "knnJoin" -> Similarity.knnJoin(spark, sfDir),
+      "matryoshkaRecall" -> Similarity.matryoshkaRecall(spark, sfDir))
+    sites.foreach { case (name, df) =>
+      val limited = exchanges(df).filter(e => collect(e.child) {
+        case w: WindowGroupLimitExec if w.mode == Partial => w
+      }.nonEmpty)
+      assert(limited.nonEmpty,
+        s"$name: no exchange above a partial WindowGroupLimit:\n" +
+          df.queryExecution.executedPlan)
+    }
+  }
+
+  test("pagerank joins once per round after the first") {
+    val plan = executed(Graph.pagerank(spark, sfDir))
+    val joins = collect(plan) { case j: BaseJoinExec => j }
+    assert(joins.size == Graph.ROUNDS - 1,
+      s"expected ${Graph.ROUNDS - 1} joins (round 1 is closed-form), got " +
+        s"${joins.size}:\n$plan")
   }
 
   test("embedding near-dup joins on (label, band, nibble), never label alone") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -57,6 +58,40 @@ class PropertiesSpec extends SparkTestBase {
       val a = df.groupBy("x").count()
       val b = sorted.groupBy("x").count()
       assert(a.except(b).isEmpty && b.except(a).isEmpty)
+    }
+  }
+
+  test("first colliding band keeps each colliding LSH pair exactly once") {
+    // a pair arrives once per band it collides in (4 bands of 4 bits);
+    // both rules must keep exactly its lowest colliding band
+    val rules = Seq[(String, Int => Boolean, Column => Column)](
+      ("exact", _ == 0, _ === 0),
+      ("flip-1", Integer.bitCount(_) <= 1, bit_count(_) <= 1))
+    val pairGen = Gen.listOfN(300, for {
+      sig <- Gen.choose(0, 0xffff)
+      flips <- Gen.choose(0, 10)
+      bits <- Gen.listOfN(flips, Gen.choose(0, 15))
+    } yield (sig, bits.foldLeft(sig)((x, b) => x ^ (1 << b))))
+    rules.foreach { case (rule, collides, collidesCol) =>
+      forAll(pairGen) { pairs =>
+        val colliding = pairs.zipWithIndex.map { case ((sig, qSig), id) =>
+          id.toLong -> (0 until 4).filter(b =>
+            collides(((sig ^ qSig) >> (4 * b)) & 15))
+        }
+        val rows = for ((id, bands) <- colliding; b <- bands)
+          yield (id, pairs(id.toInt)._1.toLong, pairs(id.toInt)._2.toLong, b)
+        val kept = rows.toDF("id", "sig", "q_sig", "band").repartition(2)
+          .filter(col("band") === operators.Similarity.firstCollidingBand(
+            col("sig").bitwiseXOR(col("q_sig")), collidesCol))
+          .select("id", "band").as[(Long, Int)].collect()
+        val expected = colliding.collect {
+          case (id, bands) if bands.nonEmpty => id -> bands.min
+        }
+        assert(kept.map(_._1).distinct.length == kept.length,
+          s"$rule: a pair kept more than one band")
+        assert(kept.toMap == expected.toMap,
+          s"$rule: kept bands differ from each pair's lowest colliding band")
+      }
     }
   }
 
